@@ -48,7 +48,6 @@ def run_alterator(
     table_names: list[str] | None = None,
     validate: bool = True,
     force: bool = False,
-    apply: bool | None = None,
     aws_account_id: str | None = None,
 ) -> dict:
     """Programmatic entry: diff DDL files against the live catalog and
@@ -72,110 +71,118 @@ def run_alterator(
     parsed = parse_ddl_corpus(
         read_ddl_corpus(spark, files, aws_account_id=aws_account_id)
     ).cache()
-    tables = [
-        r["table_name"]
-        for r in parsed.select("table_name").distinct().collect()
-        if r["table_name"]
-    ]
-    cat_cols, cat_tables = snapshot_catalog(spark, tables)
-    outcomes = hive_diff(parsed, cat_cols, cat_tables, force=force).cache()
-    ice_tables = [
-        r["table_name"]
-        for r in outcomes.filter("outcome = 'iceberg'").select("table_name").collect()
-    ]
-    ice = None
-    if ice_tables:
-        ice = iceberg_diff(
-            parsed.filter(parsed.table_name.isin(ice_tables)), cat_cols, cat_tables
-        )
-    report = build_report(outcomes, ice, validate=validate, force=force)
-    # S6 version bracket: record each to-be-altered table's catalog
-    # version BEFORE apply (reference brackets Glue update_table with
-    # two get_table_versions calls, alterator.py:434-440). Validate
-    # mode reports previous == current.
-    for e in report["success_tables"]:
-        v = table_version(spark, e["table_name"])
-        e["previous_version"] = v
-        e["current_version"] = v
-
-    if apply if apply is not None else not validate:
-        # ONE collect for all tables' catalog schemas (not a collect per
-        # table — at a 500-table corpus that's 500 catalog round-trips
-        # re-materializing the snapshot plan 500 times).
-        cat_schema: dict[str, list[dict[str, str]]] = {}
-        for r in (
-            cat_cols.filter(~F.col("is_partition"))
-            .orderBy("table_name", "position")
-            .collect()
-        ):
-            cat_schema.setdefault(r["table_name"], []).append(
-                {"Name": r["name"], "Type": r["type"]}
-            )
-        # live-iceberg tables whose snapshot has no real field ids
-        # (no metadata.json available): partition DDL would be built on
-        # NULL join keys — refuse it rather than emit spurious
-        # ADD/DROP PARTITION FIELD.
-        null_fid = {
+    outcomes = None
+    # both frames are cached for the run only: a long-lived session
+    # must not carry one run's parse or diff into the next
+    try:
+        tables = [
             r["table_name"]
-            for r in cat_cols.filter(
-                F.col("is_partition") & F.col("field_id").isNull()
+            for r in parsed.select("table_name").distinct().collect()
+            if r["table_name"]
+        ]
+        cat_cols, cat_tables = snapshot_catalog(spark, tables)
+        outcomes = hive_diff(parsed, cat_cols, cat_tables, force=force).cache()
+        ice_tables = [
+            r["table_name"]
+            for r in outcomes.filter("outcome = 'iceberg'").select("table_name").collect()
+        ]
+        ice = None
+        if ice_tables:
+            ice = iceberg_diff(
+                parsed.filter(parsed.table_name.isin(ice_tables)), cat_cols, cat_tables
             )
-            .select("table_name")
-            .distinct()
-            .collect()
-        }
-
-        per_table: list[tuple[str, list[str]]] = []
-        apply_errors: dict[str, str] = {}
+        report = build_report(outcomes, ice, validate=validate, force=force)
+        # S6 version bracket: record each to-be-altered table's catalog
+        # version BEFORE apply (reference brackets Glue update_table with
+        # two get_table_versions calls, alterator.py:434-440). Validate
+        # mode reports previous == current.
         for e in report["success_tables"]:
-            per_table.append(
-                (
-                    e["table_name"],
-                    hive_alter_statements(
+            v = table_version(spark, e["table_name"])
+            e["previous_version"] = v
+            e["current_version"] = v
+
+        if not validate:
+            # ONE collect for all tables' catalog schemas (not a collect per
+            # table — at a 500-table corpus that's 500 catalog round-trips
+            # re-materializing the snapshot plan 500 times).
+            cat_schema: dict[str, list[dict[str, str]]] = {}
+            for r in (
+                cat_cols.filter(~F.col("is_partition"))
+                .orderBy("table_name", "position")
+                .collect()
+            ):
+                cat_schema.setdefault(r["table_name"], []).append(
+                    {"Name": r["name"], "Type": r["type"]}
+                )
+            # live-iceberg tables whose snapshot has no real field ids
+            # (no metadata.json available): partition DDL would be built on
+            # NULL join keys — refuse it rather than emit spurious
+            # ADD/DROP PARTITION FIELD.
+            null_fid = {
+                r["table_name"]
+                for r in cat_cols.filter(
+                    F.col("is_partition") & F.col("field_id").isNull()
+                )
+                .select("table_name")
+                .distinct()
+                .collect()
+            }
+
+            per_table: list[tuple[str, list[str]]] = []
+            apply_errors: dict[str, str] = {}
+            for e in report["success_tables"]:
+                per_table.append(
+                    (
                         e["table_name"],
-                        e["details"]["add"],
-                        e["details"]["delete"],
-                        catalog_schema=cat_schema.get(e["table_name"]),
-                    ),
+                        hive_alter_statements(
+                            e["table_name"],
+                            e["details"]["add"],
+                            e["details"]["delete"],
+                            catalog_schema=cat_schema.get(e["table_name"]),
+                        ),
+                    )
                 )
-            )
-        for e in report["iceberg_tables"]:
-            if "sequenceMismatch" in e:
-                continue
-            if e.get("migration") == "True":
-                # the catalog table is still Hive — Iceberg-only DDL
-                # (partition fields, column moves, renames) would fail
-                # on it. Reference treats migration tables as
-                # report-only (alterator.py migration path).
-                continue
-            entry = {**e, "table_name": e["table_name"].split(".", 1)[-1]}
-            if e["table_name"] in null_fid and e.get("partition_columns"):
-                apply_errors[e["table_name"]] = (
-                    "partition DDL skipped: catalog snapshot has no "
-                    "iceberg field ids (no metadata_location)"
-                )
-                entry = {k: v for k, v in entry.items() if k != "partition_columns"}
-            per_table.append((e["table_name"], iceberg_alter_statements(entry)))
+            for e in report["iceberg_tables"]:
+                if "sequenceMismatch" in e:
+                    continue
+                if e.get("migration") == "True":
+                    # the catalog table is still Hive — Iceberg-only DDL
+                    # (partition fields, column moves, renames) would fail
+                    # on it. Reference treats migration tables as
+                    # report-only (alterator.py migration path).
+                    continue
+                entry = {**e, "table_name": e["table_name"].split(".", 1)[-1]}
+                if e["table_name"] in null_fid and e.get("partition_columns"):
+                    apply_errors[e["table_name"]] = (
+                        "partition DDL skipped: catalog snapshot has no "
+                        "iceberg field ids (no metadata_location)"
+                    )
+                    entry = {k: v for k, v in entry.items() if k != "partition_columns"}
+                per_table.append((e["table_name"], iceberg_alter_statements(entry)))
 
-        # per-table application with error collection — one failing
-        # table must not abort the remaining tables mid-run (earlier
-        # tables are already altered; DDL has no transaction to roll
-        # back into).
-        applied: list[str] = []
-        for name, stmts in per_table:
-            try:
-                apply_statements(spark, stmts)
-                applied += stmts
-            except Exception as exc:  # noqa: BLE001 — collected per table
-                apply_errors[name] = str(exc)
-        report["applied_statements"] = applied
-        if apply_errors:
-            report["apply_errors"] = apply_errors
-        # close the S6 bracket: re-fetch versions for altered tables
-        for e in report["success_tables"]:
-            if e["table_name"] not in apply_errors:
-                e["current_version"] = table_version(spark, e["table_name"])
-    return report
+            # per-table application with error collection — one failing
+            # table must not abort the remaining tables mid-run (earlier
+            # tables are already altered; DDL has no transaction to roll
+            # back into).
+            applied: list[str] = []
+            for name, stmts in per_table:
+                try:
+                    apply_statements(spark, stmts)
+                    applied += stmts
+                except Exception as exc:  # noqa: BLE001 — collected per table
+                    apply_errors[name] = str(exc)
+            report["applied_statements"] = applied
+            if apply_errors:
+                report["apply_errors"] = apply_errors
+            # close the S6 bracket: re-fetch versions for altered tables
+            for e in report["success_tables"]:
+                if e["table_name"] not in apply_errors:
+                    e["current_version"] = table_version(spark, e["table_name"])
+        return report
+    finally:
+        parsed.unpersist(blocking=False)
+        if outcomes is not None:
+            outcomes.unpersist(blocking=False)
 
 
 def write_report(spark: SparkSession, report: dict, uri: str) -> None:

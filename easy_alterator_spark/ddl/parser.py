@@ -274,10 +274,3 @@ def parse_ddl_corpus(corpus: DataFrame) -> DataFrame:
         _parse_tblprops(ddl).alias("tblprops"),
     )
 
-
-def explode_columns(parsed: DataFrame) -> DataFrame:
-    """(table_name, pos, name, type, commented, renamed_from, after,
-    backfilled_from, first) — one row per declared column."""
-    return parsed.select(
-        "table_name", F.explode("columns").alias("c")
-    ).select("table_name", "c.*")

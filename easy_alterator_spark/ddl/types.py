@@ -4,10 +4,10 @@ Re-expresses the reference rule book (cf. /root/reference/src/rules/
 rule_book.py:226-345) in two forms:
 
 - plain-Python helpers for driver-side use (rendering DDL, tests);
-- Spark ``Column`` expressions + a broadcastable allowlist DataFrame so
-  compatibility classification of millions of column pairs runs as one
-  join/filter, never a row-wise UDF (the reference's hot path was a
-  pandas ``df.apply`` — rule_book.py:178-191).
+- Spark ``Column`` expressions so compatibility classification of
+  millions of column pairs runs as one projection, never a row-wise
+  UDF (the reference's hot path was a pandas ``df.apply`` —
+  rule_book.py:178-191).
 
 Two vocabularies are kept deliberately separate (SURVEY.md §7 watch
 list): the *comparison* domain uses non-standard names (``long``,
@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _DECIMAL_RE = re.compile(r"decimal\((\d+),\s*(\d+)\)")
@@ -125,10 +125,6 @@ def normalize_iceberg_ddl_type(t: str) -> str:
     if low == "timestamp":
         return "timestamptz"
     return DDL_TO_ICEBERG.get(t, t)
-
-
-def iceberg_to_spark_type(t: str) -> str:
-    return ICEBERG_TO_SPARK.get(t, t)
 
 
 def decimal_compatible(old: str, new: str) -> bool:
@@ -267,19 +263,6 @@ def iceberg_to_spark_type_col(t: Column) -> Column:
     for src, dst in ICEBERG_TO_SPARK.items():
         expr = F.when(t == src, F.lit(dst)) if expr is None else expr.when(t == src, F.lit(dst))
     return expr.otherwise(t)
-
-
-def compat_pairs(spark: SparkSession) -> DataFrame:
-    """The compatibility matrix as a tiny broadcastable DataFrame
-    (engine, old_type, new_type) — join-side allowlist for bulk
-    classification (FIXTURES.md B5)."""
-    rows = [
-        (engine, old, new)
-        for engine, matrix in COMPATIBILITY.items()
-        for old, news in matrix.items()
-        for new in news
-    ]
-    return spark.createDataFrame(rows, "engine string, old_type string, new_type string")
 
 
 def decimal_compatible_col(old: Column, new: Column) -> Column:

@@ -45,7 +45,7 @@ def _norm(t: Column) -> Column:
     return TY.normalize_hive_type_col(t)
 
 
-def _column_diff(hql_cols: DataFrame, cat_cols: DataFrame, engine: str) -> DataFrame:
+def _column_diff(hql_cols: DataFrame, cat_cols: DataFrame) -> DataFrame:
     """Per-FILE add/delete/compatible/incompatible aggregates.
 
     Keyed by file_path, not table_name: two DDL files may name the same
@@ -76,7 +76,7 @@ def _column_diff(hql_cols: DataFrame, cat_cols: DataFrame, engine: str) -> DataF
         & j["type_old"].isNotNull()
         & (_norm(j["type_new"]) != _norm(j["type_old"]))
     )
-    compat = TY.is_compatible_col(F.col("type_old"), F.col("type_new"), engine)
+    compat = TY.is_compatible_col(F.col("type_old"), F.col("type_new"), "athena")
     per_col = j.select(
         "file_path",
         "Name",
@@ -195,7 +195,6 @@ def hive_diff(
     parsed: DataFrame,
     cat_cols: DataFrame,
     cat_tables: DataFrame,
-    engine: str = "athena",
     force: bool = False,
 ) -> DataFrame:
     """Route + diff the whole DDL corpus against the catalog snapshot.
@@ -246,7 +245,6 @@ def hive_diff(
     col_diff = _column_diff(
         hql_cols.select("file_path", "pos", "name", "type", "backfilled_from"),
         cat_f.select("file_path", "name", "type", "position"),
-        engine,
     )
     hql_parts = parsed.select(
         "file_path", F.explode("hive_partitions").alias("p")

@@ -24,12 +24,10 @@ both because Spark's higher-order functions evaluate interpreted
 
 - the dense hyperplane projection in
   :func:`embedding_lsh_dedup_pairs` (pandas_udf numpy matmul);
-- the MinHash signature in :func:`_minhash_from_hashes` (r11,
-  pandas_udf numpy multiply-add — bit-identical to the Column twin
-  :func:`_minhash_from_hashes_col`, which is kept for the
-  equivalence tests in tests/test_round11_optim.py and selectable
-  via ``SPARK_GRAFT_MINHASH_COLUMN=1`` for environments where the
-  Python worker boundary is unavailable).
+- the MinHash signature in :func:`_minhash_kernel` (r11, pandas_udf
+  numpy multiply-add — bit-identical to the Column form
+  :func:`_minhash_from_hashes_col`, which is kept only as the
+  reference for the equivalence tests in tests/test_round11_optim.py).
 """
 
 from __future__ import annotations
@@ -161,8 +159,7 @@ def _minhash_kernel(num_perm: int):
     is the upstream set-collapse). The arithmetic is the SAME
     overflow-free integer multiply-add mod 2^31-1 — int64 all the way,
     so the result is bit-identical to the Column form (pinned by
-    tests/test_round11_optim.py) and order-free. The Column twin is
-    kept for environments where the Python boundary is unavailable.
+    tests/test_round11_optim.py) and order-free.
     """
     import numpy as np
 
@@ -215,21 +212,8 @@ def _minhash_kernel(num_perm: int):
     return mh
 
 
-def _minhash_from_hashes(htoks: F.Column, num_perm: int) -> F.Column:
-    """Signature from pre-hashed (long) tokens — Arrow numpy kernel
-    (see :func:`_minhash_kernel`); bit-identical to the Column twin
-    :func:`_minhash_from_hashes_col`, which
-    ``SPARK_GRAFT_MINHASH_COLUMN=1`` selects for environments where
-    the Python worker boundary is unavailable (r12, ADVICE-r11)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_MINHASH_COLUMN") == "1":
-        return _minhash_from_hashes_col(htoks, num_perm)
-    return _minhash_kernel(num_perm)(htoks)
-
-
 def _minhash_from_hashes_col(htoks: F.Column, num_perm: int) -> F.Column:
-    """Column-expression MinHash twin (pre-r11 production path).
+    """Column-expression MinHash reference (pre-r11 production path).
 
     Every permutation is an overflow-free multiply-add universal hash
     over the two 31-bit halves of the 64-bit token hash (see constant
@@ -280,75 +264,11 @@ def _minhash_from_hashes_col(htoks: F.Column, num_perm: int) -> F.Column:
     return F.when(F.size(htoks) > 0, sig).otherwise(sentinel)
 
 
-def minhash_signature(toks: F.Column, num_perm: int = 64) -> F.Column:
-    """num_perm-wide MinHash signature of a (string) token-set column.
-
-    Tokens are hashed ONCE (xxhash64); permutations are integer
-    multiply-adds over that value (see :func:`_minhash_from_hashes`).
-    All row-local — zero shuffle, zero Python.
-    """
-    return _minhash_from_hashes(F.transform(toks, lambda t: F.xxhash64(t)), num_perm)
-
-
 def _band_hashes(sig: F.Column, bands: int, rows_per_band: int) -> F.Column:
     """array of per-band bucket hashes — one nested HOF expression."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.hash(F.slice(sig, b * rows_per_band + 1, rows_per_band), b),
-    )
-
-
-def minhash_lsh_candidates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-) -> DataFrame:
-    """Candidate near-dup pairs via banded MinHash.
-
-    bands=16 × rows=4 over 64 perms -> s-curve threshold ≈ (1/16)^(1/4)
-    ≈ 0.5 Jaccard. The self-join shuffles on (band_idx, band_hash) —
-    uniformly distributed keys, so no skew at any corpus size.
-    """
-    rows_per_band = num_perm // bands
-    # Spread docs across cores before the per-row signature math — a
-    # single-file parquet source would otherwise pin the map stage to
-    # one task.
-    sig = (
-        docs.select(F.col(id_col).alias("id"), T.distinct_tokens(F.col(text_col)).alias("toks"))
-        .repartition("id")
-        .select("id", minhash_signature(F.col("toks"), num_perm).alias("sig"))
-    )
-    # literal-sequence explode + element_at, NOT posexplode of the
-    # computed array — see minhash_dedup_pairs for why (inferred
-    # size()>0 filter pushdown re-evaluates the signature at the scan)
-    banded = (
-        sig.withColumn("bh", _band_hashes(F.col("sig"), bands, rows_per_band))
-        .select(
-            "id",
-            F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band_idx"),
-            F.col("bh"),
-        )
-        .withColumn("band_hash", F.element_at(F.col("bh"), F.col("band_idx") + 1))
-        .drop("bh")
-    )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    return (
-        # shuffle_hash forces both sides through an Exchange on the band
-        # keys; the subtrees are identical, so signatures are computed
-        # once and the second side is a ReusedExchange (a broadcast
-        # build would recompute them on the build side).
-        left.hint("shuffle_hash")
-        .join(
-            right,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("doc_id_a"), F.col("r.id").alias("doc_id_b"))
-        .distinct()
     )
 
 
@@ -361,7 +281,6 @@ def minhash_dedup_pairs(
     bands: int = 16,
     df_prune: float | None = None,
     min_set: int = 1,
-    verify_in_join: bool = False,
 ) -> DataFrame:
     """MinHash-LSH candidates verified with exact word-set Jaccard.
 
@@ -405,22 +324,6 @@ def minhash_dedup_pairs(
     bands×-inflated distinct shuffle and a separate signature-fetch
     join — the right side of the trade whenever collisions are
     plentiful, which is exactly when dedup is worth running.
-
-    ``verify_in_join`` (small-corpus / collision-light only — OFF by
-    default, and deliberately NOT used by the registry query): carries
-    ``hset`` + ``members`` in the banded rows and evaluates the EXACT
-    Jaccard inside the band join, replacing both the signature
-    pre-verify and the join-back shuffle. Measured both ways (output
-    bit-identical, pinned in tests): at sf0.01 it wins (7.3 → 5.0 s —
-    the saved join-back dominates), but at sf0.1 it LOSES 4×
-    (7.6 → 30.7 s). The reason is structural, not tunable: the set
-    payload is duplicated ×``bands`` through the band-explode
-    exchange, so its cost grows with corpus size × bands, while the
-    join-back it replaces moves each set exactly once and only for
-    candidate survivors. At the collision floor — precisely when dedup
-    is worth running — the default path is the right one at every
-    scale that matters; the fused mode is kept for interactive /
-    small-batch probes where one shuffle fewer beats byte volume.
     """
     hs = docs.select(
         F.col(id_col).alias("id"),
@@ -501,12 +404,10 @@ def minhash_dedup_pairs(
     # run into minutes). Predicates on a generated literal column
     # cannot sink below the Generate, so sig/bh stay computed once per
     # unique set.
-    carry = ["hset", "members"] if verify_in_join else []
     sig = reps.select(
         "id",
         F.size("hset").alias("sz"),
-        _minhash_from_hashes(F.col("hset"), num_perm).alias("sig"),
-        *carry,
+        _minhash_kernel(num_perm)(F.col("hset")).alias("sig"),
     )
     banded = (
         sig.withColumn("tsig", tsig)
@@ -516,7 +417,6 @@ def minhash_dedup_pairs(
             "sz",
             "tsig",
             "tbh",
-            *carry,
             F.explode(band_seq).alias("band_idx"),
         )
         .withColumn("band_hash", F.element_at(F.col("tbh"), F.col("band_idx") + 1))
@@ -547,71 +447,39 @@ def minhash_dedup_pairs(
     est_ok = F.size(F.array_intersect(F.col("l.tsig"), F.col("r.tsig"))) >= F.lit(
         int(pre_cut * num_perm)
     )
-    base_cond = (
+    cond = (
         (F.col("l.band_idx") == F.col("r.band_idx"))
         & (F.col("l.band_hash") == F.col("r.band_hash"))
         & (F.col("l.id") < F.col("r.id"))
         & size_ok
         & first_band
+        & est_ok
     )
-    if verify_in_join:
-        # exact Jaccard as the LAST join conjunct (short-circuit: only
-        # first-band survivors reach the intersect). The predicate is
-        # the SAME inter/(|A|+|B|-inter) >= t division the join-back
-        # path evaluates — NOT the cross-multiplied
-        # inter*(1+t) >= t*(|A|+|B|) form, whose different fp rounding
-        # drops boundary pairs (t=0.9, inter=18, sizes 19+19:
-        # 18*1.9 = 34.1999… < 0.9*38 = 34.2000…, yet 18/20 == 0.9
-        # passes the division). Mode choice must never change output.
-        inter_c = F.size(F.array_intersect(F.col("l.hset"), F.col("r.hset")))
-        exact_ok = (
-            inter_c.cast("double") / (F.col("l.sz") + F.col("r.sz") - inter_c)
-        ) >= F.lit(threshold)
-        # members ride along too (duplicate-set collapse makes them
-        # avg ~1 id/set), so the pair expansion is a projection — the
-        # whole operator is ONE shuffle after the set-collapse.
-        verified = (
-            left.hint("shuffle_hash")
-            .join(right, base_cond & exact_ok)
-            .select(
-                F.col("l.members").alias("ma"),
-                F.col("r.members").alias("mb"),
-                (
-                    inter_c.cast("double")
-                    / (F.col("l.sz") + F.col("r.sz") - inter_c)
-                ).alias("jac"),
-            )
+    cands = (
+        # identical subtrees + shuffle_hash -> the second Exchange on
+        # the band keys is reused; signatures computed once.
+        left.hint("shuffle_hash")
+        .join(right, cond)
+        .select(F.col("l.id").alias("rid_a"), F.col("r.id").alias("rid_b"))
+    )
+    ga = reps.select(F.col("id").alias("rid_a"), F.col("hset").alias("ha"), F.col("members").alias("ma"))
+    gb = reps.select(F.col("id").alias("rid_b"), F.col("hset").alias("hb"), F.col("members").alias("mb"))
+    # |A ∪ B| = |A| + |B| - |A ∩ B| (the sets are distinct arrays), so
+    # ONE array_intersect pass per candidate instead of intersect+union
+    # — the verify stage is the dominant cost and this halves it.
+    cross = (
+        cands.join(ga, "rid_a")
+        .join(gb, "rid_b")
+        .withColumn("inter", F.size(F.array_intersect("ha", "hb")))
+        .withColumn(
+            "jac",
+            F.col("inter").cast("double")
+            / (F.size("ha") + F.size("hb") - F.col("inter")),
         )
-        cross = (
-            verified.select(F.explode("ma").alias("ida"), "mb", "jac")
-            .select("ida", F.explode("mb").alias("idb"), "jac")
-        )
-    else:
-        cands = (
-            # identical subtrees + shuffle_hash -> the second Exchange on
-            # the band keys is reused; signatures computed once.
-            left.hint("shuffle_hash")
-            .join(right, base_cond & est_ok)
-            .select(F.col("l.id").alias("rid_a"), F.col("r.id").alias("rid_b"))
-        )
-        ga = reps.select(F.col("id").alias("rid_a"), F.col("hset").alias("ha"), F.col("members").alias("ma"))
-        gb = reps.select(F.col("id").alias("rid_b"), F.col("hset").alias("hb"), F.col("members").alias("mb"))
-        # |A ∪ B| = |A| + |B| - |A ∩ B| (the sets are distinct arrays), so
-        # ONE array_intersect pass per candidate instead of intersect+union
-        # — the verify stage is the dominant cost and this halves it.
-        cross = (
-            cands.join(ga, "rid_a")
-            .join(gb, "rid_b")
-            .withColumn("inter", F.size(F.array_intersect("ha", "hb")))
-            .withColumn(
-                "jac",
-                F.col("inter").cast("double")
-                / (F.size("ha") + F.size("hb") - F.col("inter")),
-            )
-            .filter(F.col("jac") >= threshold)
-            .select(F.explode("ma").alias("ida"), "mb", "jac")
-            .select("ida", F.explode("mb").alias("idb"), "jac")
-        )
+        .filter(F.col("jac") >= threshold)
+        .select(F.explode("ma").alias("ida"), "mb", "jac")
+        .select("ida", F.explode("mb").alias("idb"), "jac")
+    )
     # --- same-set pairs: jac is exactly 1.0 ------------------------
     within = (
         groups.filter(F.size("members") > 1)
@@ -904,7 +772,7 @@ def _inc_banded(rp: DataFrame, side: str, num_perm: int, bands: int) -> DataFram
     sig = rp.select(
         f"{side}_rid",
         F.size(f"{side}_hset").alias(f"{side}_sz"),
-        _minhash_from_hashes(F.col(f"{side}_hset"), num_perm).alias("sig"),
+        _minhash_kernel(num_perm)(F.col(f"{side}_hset")).alias("sig"),
     )
     tsig = F.zip_with(
         F.col("sig"),

@@ -51,63 +51,11 @@ def _range_tagged(
 
     Cost: one executor-memory/disk materialization of the input. The
     inputs here are distinct-value/user/vocabulary-grained in every
-    registered query; for truly data-sized ranking at 100 TB the
-    alternative is the two-job form implemented as
-    ``global_rank(..., strategy="broadcast_bounds")`` — boundaries
-    computed once, bucket by broadcast binary search (a deterministic
-    function of the key, so nothing needs pinning) — which trades the
-    materialization for a second scan."""
+    registered query."""
     parts = df.repartitionByRange(int(n), *order_cols)
     return parts.withColumn(
         "__pid", F.spark_partition_id()
     ).localCheckpoint(eager=False)
-
-
-def _bounds_bucketed(
-    df: DataFrame, order_cols: list[Column], first_name: str, n: int
-) -> DataFrame:
-    """Tag rows with a bucket id computed by broadcast binary search
-    against driver-collected boundaries of the FIRST order column —
-    the two-job alternative to ``_range_tagged``.
-
-    Why it needs no pinning: the boundary list is collected ONCE to
-    the driver (approx quantiles of the first key — any draw is
-    CORRECT, balance is only a performance property) and re-enters
-    the plan as a literal, so the bucket id is a pure deterministic
-    function of the row's key. Both consumers (per-bucket locals and
-    per-bucket totals) recompute identical ids even if the scan
-    re-executes — exactly the divergence ``_range_tagged`` has to
-    localCheckpoint away. The trade: a second scan of the input (one
-    for quantiles, one for the ranking) instead of a data-sized
-    materialization — the right side of the trade when the input is
-    truly data-sized at 100 TB.
-
-    Correctness requires only that equal first-key values share a
-    bucket (binary search gives that) and bucket ids ascend with the
-    key; rows then order correctly across buckets by the first key
-    and within buckets by the full ``order_cols``. Heavy ties on the
-    first key concentrate in one bucket — the documented skew caveat
-    (same as any range scheme without tiebreak columns).
-
-    UNSUPPORTED inputs (ADVICE r10): NaN or NULL first-key values.
-    Spark's sort places NaN after all doubles and NULL first (asc),
-    but the ``bound <= key`` comparisons here evaluate NULL/false for
-    both, assigning bucket 0 — a too-low bucket and a wrong global
-    rank. ``range_pin`` handles such keys correctly; callers with
-    possibly-non-finite first keys must use it (every registered
-    query does) or pre-filter."""
-    probs = [i / n for i in range(1, n)]
-    bounds = df.approxQuantile(first_name, probs, 0.001)
-    barr = F.array(*[F.lit(float(b)) for b in bounds])
-    key = F.col(first_name).cast("double")
-    # bucket = #{bound <= key}: O(n) fold over a partition-count-sized
-    # literal array, JVM-side, no UDF; n is tens, not data-sized
-    bucket = F.aggregate(
-        barr,
-        F.lit(0),
-        lambda acc, b: acc + F.when(b <= key, 1).otherwise(0),
-    )
-    return df.withColumn("__pid", bucket)
 
 
 def global_rank(
@@ -115,7 +63,6 @@ def global_rank(
     order_cols: list[str | Column],
     rank_col: str = "rank",
     num_partitions: int | None = None,
-    strategy: str = "range_pin",
 ) -> DataFrame:
     """Append 1-based ``rank_col`` = exact global rank under
     ``order_cols`` (which must form a TOTAL order — a unique key
@@ -126,25 +73,11 @@ def global_rank(
     sort direction, so partition ids still ascend with the requested
     order (the global_prefix_max device).
 
-    ``strategy`` picks how rows are assigned to ordered buckets:
-
-    - ``"range_pin"`` (default, used by every registered query):
-      ``repartitionByRange`` + localCheckpoint pinning — one shuffle
-      plus a materialization of the input. Right when the input is
-      distinct-value/dimension-grained (all current callers).
-    - ``"broadcast_bounds"``: the two-job form named in
-      ``_range_tagged``'s docstring — boundaries collected once,
-      bucket by broadcast binary search (a pure function of the key,
-      so nothing needs pinning), then the same local-rank + offset
-      composition. Trades the materialization for a second scan; the
-      right shape for truly data-sized ranking. Requires the first
-      order entry to be an ascending numeric column NAME (boundaries
-      are quantiles of it). Property-tested equal to ``range_pin`` on
-      randomized inputs in tests/test_round10_audit.py.
+    Rows are assigned to ordered buckets by ``repartitionByRange`` +
+    localCheckpoint pinning (:func:`_range_tagged`) — one shuffle plus
+    a materialization of the input.
     """
-    ranked, _counts = _ranked_and_counts(
-        df, order_cols, rank_col, num_partitions, strategy
-    )
+    ranked, _counts = _ranked_and_counts(df, order_cols, rank_col, num_partitions)
     return ranked
 
 
@@ -153,7 +86,6 @@ def _ranked_and_counts(
     order_cols: list[str | Column],
     rank_col: str,
     num_partitions: int | None = None,
-    strategy: str = "range_pin",
 ) -> tuple[DataFrame, DataFrame]:
     """:func:`global_rank` body, additionally returning the
     one-row-per-partition ``(__pid, __cnt)`` counts table so callers
@@ -161,23 +93,11 @@ def _ranked_and_counts(
     those few rows instead of re-scanning the ranked data (r11: the
     extra full pass was one whole job per ntile call — events_rfm
     runs three)."""
-    first = order_cols[0]
     order_cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     n = num_partitions or df.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "32"
     )
-    if strategy == "broadcast_bounds":
-        if not isinstance(first, str):
-            raise ValueError(
-                "broadcast_bounds needs the first order entry to be an "
-                "ascending column name (boundary quantiles are computed "
-                "on it); got a Column expression"
-            )
-        tagged = _bounds_bucketed(df, order_cols, first, int(n))
-    elif strategy == "range_pin":
-        tagged = _range_tagged(df, order_cols, int(n))
-    else:
-        raise ValueError(f"unknown global_rank strategy {strategy!r}")
+    tagged = _range_tagged(df, order_cols, int(n))
     counts = tagged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
     w_off = (
         Window.orderBy("__pid")

@@ -64,10 +64,6 @@ def exchange_count(plan: str) -> int:
     return len(re.findall(r"\bExchange\b", plan)) - plan.count("ReusedExchange")
 
 
-def wholestage_codegen_ids(plan: str) -> set[str]:
-    return set(re.findall(r"codegen id : (\d+)", plan))
-
-
 def assert_filter_pushed(df: DataFrame, fragment: str) -> None:
     plan = formatted_plan(df)
     assert any(

@@ -30,8 +30,6 @@ label structure, so the metric surfaces are non-degenerate.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -1017,41 +1015,13 @@ def _logreg_grad(xy, w):
     )
 
 
-# memo-key -> (w_after_E-1_epochs, n): the trained-probe memo. The
-# training is deterministic in the input DATA, so ml_logreg_gd and
-# ml_logreg_eval share one training run per corpus per process — the
-# offline-codebook discipline (see cluster_kmeans / ivf_centroids)
-# applied to weights. Keyed on (realpath, st_mtime_ns) of the
-# embeddings parquet — the _SCHEMA_CACHE discipline in
-# sources/tables.py — so a fixture REWRITTEN at the same path in the
-# same process retrains instead of silently reusing stale weights.
-# When the path is not stat-able the memo is bypassed entirely. The
-# xy frame is NOT memoized — localCheckpoints are session-scoped and
-# each query call re-derives its own.
-_LOGREG_MEMO: dict[tuple[str, int], tuple[list, int]] = {}
-
-
-def _logreg_memo_key(sf_dir):
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (os.path.realpath(path), st.st_mtime_ns)
-
-
 def _logreg_weights(spark, sf_dir):
     """Run E-1 epochs driver-side (dimension-sized 64-row collects,
     the graph_pagerank/cluster_kmeans discipline — never data-sized),
     returning (w_prev list, n, xy) so the caller can express the
-    FINAL epoch as a distributed plan. Training is memoized per
-    corpus path (deterministic, so recomputation is pure waste when
-    ml_logreg_gd and ml_logreg_eval run in one session)."""
+    FINAL epoch as a distributed plan. Each call trains afresh: no
+    weights carry from one query run to the next."""
     xy = _logreg_xy(spark, sf_dir).localCheckpoint(eager=True)
-    key = _logreg_memo_key(sf_dir)
-    if key is not None and key in _LOGREG_MEMO:
-        w, n = _LOGREG_MEMO[key]
-        return list(w), n, xy
     n = xy.count()
     w = [0.0] * _LOGREG_DIMS
     for _ in range(_LOGREG_EPOCHS - 1):
@@ -1062,8 +1032,6 @@ def _logreg_weights(spark, sf_dir):
             w[d] - 0.5 * (float(grad.get(d, 0)) / float(n * 10000000000))
             for d in range(_LOGREG_DIMS)
         ]
-    if key is not None:
-        _LOGREG_MEMO[key] = (list(w), n)
     return w, n, xy
 
 

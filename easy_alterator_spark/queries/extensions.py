@@ -188,10 +188,9 @@ def dedup_minhash_lsh(spark, sf_dir):
     # 0.9 verify threshold are candidates with P(miss) ≈ 4e-8 — the
     # brute-force oracle matches (verified in tests at sf0.01). At
     # 100 TB only the band join shuffles; no all-pairs stage exists.
-    # Default join-back verify, NOT verify_in_join: measured at sf0.1
-    # the fused in-join exact verify is 4x slower (30.7 vs 7.6 s)
-    # because the set payload rides the band-explode exchange x16
-    # bands — see minhash_dedup_pairs docstring for the full trade.
+    # The exact verify joins the sets back after the band join: an
+    # in-join verify measured 4x slower at sf0.1 (30.7 vs 7.6 s)
+    # because the set payload rides the band-explode exchange x16.
     return D.minhash_dedup_pairs(load_table(spark, sf_dir, "documents"), threshold=0.9)
 
 

@@ -13,7 +13,7 @@ to repeated `groupBy(key)` workloads (bucket pruning + no exchange).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -35,8 +35,3 @@ def write_bucketed(
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
 
-
-def bucketed_join_ready(spark: SparkSession, left: str, right: str) -> bool:
-    """True if both catalog tables exist (bucket metadata rides in the
-    catalog; Spark validates bucket-count compatibility at plan time)."""
-    return spark.catalog.tableExists(left) and spark.catalog.tableExists(right)

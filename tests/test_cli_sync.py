@@ -116,6 +116,20 @@ class TestCli:
         report = run_alterator(spark, [str(ddl)], validate=True)
         assert json.loads(json.dumps(report))["new_tables"] == [f"{db}.not_there"]
 
+    def test_run_leaves_no_cached_frames(self, spark, db, tmp_path):
+        """A run caches its parse and diff for its own use only: a
+        long-lived session must not carry them into the next run."""
+        from easy_alterator_spark.cli import run_alterator
+
+        spark.sql(f"CREATE TABLE {db}.cli_c (id INT) USING parquet")
+        (tmp_path / "cli_c.hql").write_text(
+            f"CREATE EXTERNAL TABLE `{db}.cli_c`(`id` int, `n2` string) STORED AS PARQUET;"
+        )
+        spark.catalog.clearCache()
+        report = run_alterator(spark, [str(tmp_path)], validate=False)
+        assert report["applied_statements"]
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
 
 class TestAwsAccountId:
     def test_env_wins(self, monkeypatch):

@@ -343,30 +343,6 @@ def test_minhash_candidates_superset_of_high_jaccard(spark):
     assert lsh == exact
 
 
-def test_minhash_verify_in_join_equality(spark):
-    """verify_in_join is a pure execution-strategy switch: the fused
-    in-join exact Jaccard (short-doc mode) must emit the bit-identical
-    pair set — including jac values — as the default join-back path.
-    Uses the full sf0.001 corpus so boundary pairs (jac exactly at the
-    0.9 threshold, where a cross-multiplied predicate would diverge in
-    fp rounding) are exercised."""
-    from easy_alterator_spark.operators.dedup import minhash_dedup_pairs
-    from easy_alterator_spark.sources import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-
-    def pairset(**kw):
-        return {
-            (r["doc_id_a"], r["doc_id_b"], r["jac"])
-            for r in minhash_dedup_pairs(docs, threshold=0.9, **kw).collect()
-        }
-
-    base = pairset()
-    fused = pairset(verify_in_join=True)
-    assert base == fused
-    assert len(base) > 0
-
-
 def test_repetition_metrics_constructed(spark):
     from easy_alterator_spark.operators.textstats import repetition_metrics
 

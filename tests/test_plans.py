@@ -69,14 +69,14 @@ class TestJoinStrategy:
         assert jc["SortMergeJoin"] == 0
 
     def test_minhash_band_join_reuses_exchange(self, spark, queries):
-        from easy_alterator_spark.operators.dedup import minhash_lsh_candidates
+        from easy_alterator_spark.operators.dedup import minhash_dedup_pairs
         from easy_alterator_spark.plans.audit import executed_plan
         from easy_alterator_spark.sources import load_table
 
         # exchange reuse is an AQE runtime decision — inspect the
         # executed plan, not the static explain
         plan = executed_plan(
-            minhash_lsh_candidates(load_table(spark, SF, "documents"))
+            minhash_dedup_pairs(load_table(spark, SF, "documents"))
         )
         # the self-join's second side must reuse the banded exchange,
         # not recompute the signatures

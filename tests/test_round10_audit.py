@@ -237,21 +237,20 @@ def test_graph_triangles_pair_build_capped(spark):
 
 
 # ---------------------------------------------------------------------------
-# global_rank strategy equivalence: range_pin vs broadcast_bounds
+# global_rank vs a pandas reference rank
 # ---------------------------------------------------------------------------
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2, 3, 4])
-def test_global_rank_strategies_equal(spark, seed):
+def test_global_rank_matches_pandas_rank(spark, seed):
     """Property: on randomized numeric inputs with a unique total
-    order, strategy='broadcast_bounds' (two-job boundary broadcast)
-    produces EXACTLY the ranks of strategy='range_pin' (the pinned
-    repartitionByRange form) — including skewed and duplicate-heavy
-    first keys, where the tiebreak column completes the order."""
+    order, global_rank (the pinned repartitionByRange form) produces
+    EXACTLY the ranks of a pandas sort over the same rows — including
+    skewed and duplicate-heavy first keys, where the tiebreak column
+    completes the order."""
     import random
 
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from easy_alterator_spark.operators.rank import global_rank
 
@@ -268,23 +267,13 @@ def test_global_rank_strategies_equal(spark, seed):
     pdf = pd.DataFrame({"k": keys, "tid": range(n)})
     df = spark.createDataFrame(pdf).repartition(8)
 
-    a = global_rank(df, ["k", "tid"], "r", strategy="range_pin")
-    b = global_rank(df, ["k", "tid"], "r", strategy="broadcast_bounds")
-    ra = {(r["k"], r["tid"]): r["r"] for r in a.collect()}
-    rb = {(r["k"], r["tid"]): r["r"] for r in b.collect()}
-    assert ra == rb
-    # ranks are a permutation of 1..n under the total order
-    assert sorted(ra.values()) == list(range(1, n + 1))
-
-
-def test_global_rank_broadcast_bounds_rejects_column_expr(spark):
-    from pyspark.sql import functions as F
-
-    from easy_alterator_spark.operators.rank import global_rank
-
-    df = spark.range(10).withColumn("k", F.col("id").cast("double"))
-    with pytest.raises(ValueError, match="broadcast_bounds"):
-        global_rank(df, [F.col("k").desc()], strategy="broadcast_bounds")
+    got = {
+        (r["k"], r["tid"]): r["r"]
+        for r in global_rank(df, ["k", "tid"], "r").collect()
+    }
+    ref = pdf.sort_values(["k", "tid"]).reset_index(drop=True)
+    want = {(k, t): i + 1 for i, (k, t) in enumerate(zip(ref["k"], ref["tid"]))}
+    assert got == want
 
 
 # ---------------------------------------------------------------------------
