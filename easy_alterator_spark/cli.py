@@ -54,8 +54,6 @@ def run_alterator(
     (unless validate) apply the resulting ALTERs. ``aws_account_id``
     fills the ``{aws_account_id}`` DDL placeholder; None resolves it
     via env / STS / EC2 instance metadata (aws.py)."""
-    from pyspark.sql import functions as F
-
     from .aws import resolve_aws_account_id
     from .ddl.parser import parse_ddl_corpus, read_ddl_corpus
     from .ddl.render import hive_alter_statements, iceberg_alter_statements
@@ -102,14 +100,15 @@ def run_alterator(
             e["current_version"] = v
 
         if not validate:
-            # ONE collect for all tables' catalog schemas (not a collect per
-            # table — at a 500-table corpus that's 500 catalog round-trips
+            # ONE collect of the snapshot for every table's catalog schema
+            # and the field-id check below (not a collect per table — at a
+            # 500-table corpus that's 500 catalog round-trips
             # re-materializing the snapshot plan 500 times).
+            snapshot = cat_cols.collect()
             cat_schema: dict[str, list[dict[str, str]]] = {}
-            for r in (
-                cat_cols.filter(~F.col("is_partition"))
-                .orderBy("table_name", "position")
-                .collect()
+            for r in sorted(
+                (r for r in snapshot if not r["is_partition"]),
+                key=lambda r: (r["table_name"], r["position"]),
             ):
                 cat_schema.setdefault(r["table_name"], []).append(
                     {"Name": r["name"], "Type": r["type"]}
@@ -120,12 +119,8 @@ def run_alterator(
             # ADD/DROP PARTITION FIELD.
             null_fid = {
                 r["table_name"]
-                for r in cat_cols.filter(
-                    F.col("is_partition") & F.col("field_id").isNull()
-                )
-                .select("table_name")
-                .distinct()
-                .collect()
+                for r in snapshot
+                if r["is_partition"] and r["field_id"] is None
             }
 
             per_table: list[tuple[str, list[str]]] = []

@@ -9,8 +9,8 @@ always references columns that are already in place.
 
 Deliberately driver-side: per-table graphs are tens of nodes
 (SURVEY.md §4.2). The distributed layer hands each table's directive
-list to :func:`plan_moves` via a plain groupBy-collect of an
-already-tiny diff result. Semantics match the reference's cascade
+list to :func:`plan_moves` through a Python UDF on that table's diff
+row. Semantics match the reference's cascade
 engine (column_position_manager.py:15-129), including its quirk that
 cycles among ``after`` directives are silently dropped by the
 Kahn-style sort (FIXTURES.md B6 pins this).

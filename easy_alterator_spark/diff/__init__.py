@@ -1,11 +1,16 @@
 """Schema-diff engine: DDL corpus vs catalog snapshot, corpus-wide.
 
-The reference diffs one table at a time in a Python loop
-(/root/reference/src/bin/alterator.py:518). Here the whole corpus is
-diffed in one Spark plan: every per-table pandas merge becomes a
-DataFrame join keyed by ``table_name``, so 458 or 458k tables is the
-same plan. Catalog snapshots are plain DataFrames (FIXTURES.md B2/B3),
-fed either from test fixtures or from the live Spark catalog
+The reference diffs one table at a time in a Python loop of small
+pandas merges (/root/reference/src/bin/alterator.py:518). Here the
+whole corpus is one Spark plan, and each table is diffed inside one
+row: the catalog snapshot is folded into a sorted array per table
+(one ``groupBy``), broadcast-joined onto the parsed DDL rows, and every
+pandas merge becomes a row-local higher-order expression (``filter``,
+``exists``, ``transform``, ``array_sort``) over two small arrays. So 458
+or 458k tables is the same few-stage plan. :mod:`.hive` and
+:mod:`.iceberg` map each reference merge to its expression. Catalog
+snapshots are plain DataFrames (FIXTURES.md B2/B3), fed either from
+test fixtures or from the live Spark catalog
 (:mod:`easy_alterator_spark.diff.catalog`).
 """
 

@@ -1,13 +1,25 @@
-"""Hive-path schema diff: DDL corpus vs catalog, one Spark plan.
+"""Hive-path schema diff: each DDL file is diffed inside its own row.
 
-Re-expresses the reference's per-file loop (alterator.py:482-739) as
-corpus-wide joins:
+The reference diffs one file at a time with small pandas merges
+(alterator.py:482-739). Here the catalog snapshot is folded into one
+sorted array per table (:func:`with_catalog`, one ``groupBy``) and
+broadcast-joined onto the parsed corpus, whose rows already carry the
+DDL's ``columns`` and ``hive_partitions`` arrays. Each reference merge
+is then a row-local higher-order expression over two small arrays:
 
-- routing/dispatch      -> one ``when/otherwise`` routing column
-- schema diff (J1-J4)   -> full-outer join on (table_name, name)
-- type compatibility F5 -> pure-Column classifier (types.is_compatible_col)
-- partition check (J9)  -> full-outer join on (table_name, pos, name)
-                           + per-table aggregates
+- routing/dispatch        -> one ``when/otherwise`` routing column
+- schema diff (J1-J4)     -> :func:`outer_pairs` on name: DDL columns vs
+                             catalog data + partition columns
+- add / delete            -> pairs with no catalog / no DDL side
+- compatible/incompatible -> retyped pairs split by the pure-Column
+                             classifier ``types.is_compatible_col``
+- partition check (J9)    -> ``outer_pairs`` on (pos, name) for the
+                             missing/retyped flags, name filters both
+                             ways for the order-only (h_extra/c_extra)
+                             test
+
+Each list is ``array_sort(struct(o, p))`` on source position, the
+reference's pandas row order, then stripped to its payload.
 
 Documented reference quirks preserved on purpose:
 
@@ -25,160 +37,161 @@ Documented reference quirks preserved on purpose:
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..ddl import types as TY
 
-def _empty_nt() -> Column:
-    return F.array().cast("array<struct<Name:string,Type:string>>")
+_CAT_T = "array<struct<is_partition:boolean,position:int,name:string,type:string,field_id:int>>"
 
 
-def _empty_chg() -> Column:
-    return F.array().cast(
-        "array<struct<Name:string,Type:string,updated_type:string,backfilled_from:string>>"
+def with_catalog(df: DataFrame, cat_cols: DataFrame) -> DataFrame:
+    """``df`` plus ``cat``: its table's catalog columns as one array
+    sorted by (is_partition, position), so data columns come first in
+    order, then partition columns in order; empty when the snapshot has
+    no rows for the table."""
+    cat = cat_cols.groupBy("table_name").agg(
+        F.array_sort(
+            F.collect_list(F.struct("is_partition", "position", "name", "type", "field_id"))
+        ).alias("cat")
+    )
+    return df.join(F.broadcast(cat), "table_name", "left").withColumn(
+        "cat", F.coalesce("cat", F.array().cast(_CAT_T))
     )
 
 
-def _norm(t: Column) -> Column:
-    """Hive comparison normalization (decimal spacing only)."""
-    return TY.normalize_hive_type_col(t)
+def unmatched(xs: Column, ys: Column, match: Callable[[Column, Column], Column]) -> Column:
+    """Elements of ``xs`` that match no element of ``ys`` (an anti join)."""
+    return F.filter(xs, lambda x: F.size(F.filter(ys, lambda y: match(x, y))) == 0)
 
 
-def _column_diff(hql_cols: DataFrame, cat_cols: DataFrame) -> DataFrame:
-    """Per-FILE add/delete/compatible/incompatible aggregates.
-
-    Keyed by file_path, not table_name: two DDL files may name the same
-    table (e.g. a stray non-CREATE statement) and must not contaminate
-    each other's diff — the reference gets this for free from its
-    per-file loop; corpus-wide joins must key on the file.
-
-    hql_cols: (file_path, pos, name, type, backfilled_from)
-    cat_cols: (file_path, name, type, position)  [data + partition cols,
-        already fanned out per file via the file->table mapping]
-    """
-    h = hql_cols.select(
-        "file_path",
-        F.col("name").alias("Name"),
-        F.col("type").alias("type_new"),
-        F.col("backfilled_from").alias("backfilled_from"),
-        F.col("pos").alias("pos_new"),
-    )
-    c = cat_cols.select(
-        "file_path",
-        F.col("name").alias("Name"),
-        F.col("type").alias("type_old"),
-        F.col("position").alias("pos_old"),
-    )
-    j = h.join(c, ["file_path", "Name"], "full_outer")
-    changed = (
-        j["type_new"].isNotNull()
-        & j["type_old"].isNotNull()
-        & (_norm(j["type_new"]) != _norm(j["type_old"]))
-    )
-    compat = TY.is_compatible_col(F.col("type_old"), F.col("type_new"), "athena")
-    per_col = j.select(
-        "file_path",
-        "Name",
-        "type_new",
-        "type_old",
-        "backfilled_from",
-        F.coalesce("pos_new", "pos_old").alias("pos"),
-        F.col("type_old").isNull().alias("is_add"),
-        F.col("type_new").isNull().alias("is_del"),
-        changed.alias("is_chg"),
-        (changed & compat).alias("is_compat"),
+def outer_pairs(
+    left: Column,
+    right: Column,
+    eq: Callable[[Column, Column], Column],
+    row: Callable[[Column | None, Column | None], Column],
+) -> Column:
+    """Full outer join of two arrays inside one row: ``row(l, r)`` for
+    every matching pair, ``row(l, None)`` / ``row(None, r)`` for the
+    elements nothing matches. A NULL ``eq`` never matches, as with a
+    join key."""
+    return F.concat(
+        F.flatten(
+            F.transform(
+                left,
+                lambda l: F.transform(F.filter(right, lambda r: eq(l, r)), lambda r: row(l, r)),
+            )
+        ),
+        F.transform(unmatched(left, right, eq), lambda l: row(l, None)),
+        F.transform(unmatched(right, left, lambda r, l: eq(l, r)), lambda r: row(None, r)),
     )
 
-    def agg_sorted(cond: Column, payload: Column) -> Column:
-        """collect matching payload structs ordered by source position
-        (pandas row order in the reference; Spark must carry it)."""
-        arr = F.array_sort(
-            F.collect_list(F.when(cond, F.struct(F.col("pos").alias("o"), payload.alias("p"))))
+
+def sorted_by(arr: Column, cond, order, payload) -> Column:
+    """Payloads of the elements where ``cond`` holds, ordered by
+    (``order``, payload)."""
+    keyed = F.transform(
+        F.filter(arr, cond), lambda x: F.struct(order(x).alias("o"), payload(x).alias("p"))
+    )
+    return F.transform(F.array_sort(keyed), lambda s: s["p"])
+
+
+def side(x: Column | None, field: str) -> Column:
+    """``x[field]``, or a string NULL for the missing side of a pair."""
+    return x[field] if x is not None else F.lit(None).cast("string")
+
+
+def _column_pairs(h_cols: Column, cat: Column) -> Column:
+    """DDL columns outer-joined with catalog columns on name (J1-J4).
+
+    Every catalog column, data and partition, takes part; a name
+    repeated on either side pairs with every same-named column of the
+    other, as in the reference's merge."""
+    return outer_pairs(
+        h_cols,
+        cat,
+        lambda h, c: h["name"] == c["name"],
+        lambda h, c: F.struct(
+            (h["name"] if h is not None else c["name"]).alias("Name"),
+            side(h, "type").alias("type_new"),
+            side(c, "type").alias("type_old"),
+            side(h, "backfilled_from").alias("backfilled_from"),
+            (h["pos"] if h is not None else c["position"]).alias("pos"),
+        ),
+    )
+
+
+def _column_lists(pairs: Column) -> dict[str, Column]:
+    """Add/delete/compatible/incompatible lists from the column pairs."""
+
+    def changed(p: Column) -> Column:
+        return (
+            p["type_new"].isNotNull()
+            & p["type_old"].isNotNull()
+            & (TY.normalize_hive_type_col(p["type_new"]) != TY.normalize_hive_type_col(p["type_old"]))
         )
-        return F.transform(arr, lambda s: s["p"])
 
-    return per_col.groupBy("file_path").agg(
-        agg_sorted(
-            F.col("is_add"),
-            F.struct(F.col("Name"), F.col("type_new").alias("Type")),
-        ).alias("add"),
-        agg_sorted(
-            F.col("is_del"),
-            F.struct(F.col("Name"), F.col("type_old").alias("Type")),
-        ).alias("delete"),
-        agg_sorted(
-            F.col("is_chg") & F.col("is_compat"),
-            F.struct(
-                F.col("Name"),
-                F.col("type_old").alias("Type"),
-                F.col("type_new").alias("updated_type"),
-                F.col("backfilled_from"),
-            ),
-        ).alias("compatible"),
-        agg_sorted(
-            F.col("is_chg") & ~F.col("is_compat"),
-            F.struct(
-                F.col("Name"),
-                F.col("type_old").alias("Type"),
-                F.col("type_new").alias("updated_type"),
-                F.col("backfilled_from"),
-            ),
-        ).alias("incompatible"),
+    def compat(p: Column) -> Column:
+        return TY.is_compatible_col(p["type_old"], p["type_new"], "athena")
+
+    def pos(p: Column) -> Column:
+        return p["pos"]
+
+    def chg(p: Column) -> Column:
+        return F.struct(
+            p["Name"].alias("Name"),
+            p["type_old"].alias("Type"),
+            p["type_new"].alias("updated_type"),
+            p["backfilled_from"].alias("backfilled_from"),
+        )
+
+    # retyped pairs, each classified once
+    retyped = F.transform(
+        F.filter(pairs, changed),
+        lambda p: F.struct(p["pos"].alias("pos"), chg(p).alias("chg"), compat(p).alias("compat")),
     )
+    return {
+        "add": sorted_by(
+            pairs,
+            lambda p: p["type_old"].isNull(),
+            pos,
+            lambda p: F.struct(p["Name"].alias("Name"), p["type_new"].alias("Type")),
+        ),
+        "delete": sorted_by(
+            pairs,
+            lambda p: p["type_new"].isNull(),
+            pos,
+            lambda p: F.struct(p["Name"].alias("Name"), p["type_old"].alias("Type")),
+        ),
+        "compatible": sorted_by(retyped, lambda r: r["compat"], pos, lambda r: r["chg"]),
+        "incompatible": sorted_by(retyped, lambda r: ~r["compat"], pos, lambda r: r["chg"]),
+    }
 
 
-def _partition_check(hql_parts: DataFrame, cat_parts: DataFrame) -> DataFrame:
-    """Per-table partition validation (rule_book.py:92-158 semantics).
+def _partition_check(h_parts: Column, cat: Column) -> tuple[Column, Column]:
+    """(part_ok, part_reason) of one file (rule_book.py:92-158
+    semantics): DDL ``PARTITIONED BY`` entries vs catalog partition
+    columns, position being part of the key (J9)."""
+    c_parts = F.filter(cat, lambda c: c["is_partition"])
+    pairs = outer_pairs(
+        h_parts,
+        c_parts,
+        lambda h, c: (h["pos"] == c["position"]) & (h["name"] == c["name"]),
+        lambda h, c: F.struct(side(h, "type").alias("type_new"), side(c, "type").alias("type_old")),
+    )
+    missing = F.exists(pairs, lambda p: p["type_new"].isNull() | p["type_old"].isNull())
+    retyped = F.coalesce(F.exists(pairs, lambda p: p["type_new"] != p["type_old"]), F.lit(False))
 
-    hql_parts: (file_path, pos, name, type) from PARTITIONED BY
-    cat_parts: (file_path, name, type, position) where is_partition
-    Returns (file_path, part_ok, part_reason).
-    """
-    h = hql_parts.select(
-        "file_path", F.col("pos"), F.col("name"), F.col("type").alias("type_new")
-    )
-    c = cat_parts.select(
-        "file_path", F.col("position").alias("pos"), F.col("name"), F.col("type").alias("type_old")
-    )
-    cnt_h = h.groupBy("file_path").agg(F.count("*").alias("n_new"))
-    cnt_c = c.groupBy("file_path").agg(F.count("*").alias("n_old"))
+    def extra(xs: Column, ys: Column) -> Column:
+        return F.size(unmatched(xs, ys, lambda x, y: x["name"] == y["name"]))
 
-    # positional full outer: order is part of the key (J9)
-    m = h.join(c, ["file_path", "pos", "name"], "full_outer")
-    mism = m.groupBy("file_path").agg(
-        F.max(
-            (F.col("type_new").isNull() | F.col("type_old").isNull()).cast("int")
-        ).alias("missing"),
-        F.max((F.col("type_new") != F.col("type_old")).cast("int")).alias("retyped"),
-    )
-    # name-set equality (order-only change detection, A4) via anti
-    # joins both ways
-    h_extra = (
-        h.select("file_path", "name")
-        .join(c.select("file_path", "name"), ["file_path", "name"], "left_anti")
-        .groupBy("file_path")
-        .agg(F.count("*").alias("h_extra"))
-    )
-    c_extra = (
-        c.select("file_path", "name")
-        .join(h.select("file_path", "name"), ["file_path", "name"], "left_anti")
-        .groupBy("file_path")
-        .agg(F.count("*").alias("c_extra"))
-    )
-
-    base = (
-        cnt_h.join(cnt_c, "file_path", "full_outer")
-        .join(mism, "file_path", "left")
-        .join(h_extra, "file_path", "left")
-        .join(c_extra, "file_path", "left")
-        .na.fill({"n_new": 0, "n_old": 0, "missing": 0, "retyped": 0, "h_extra": 0, "c_extra": 0})
-    )
-    sets_equal = (F.col("h_extra") == 0) & (F.col("c_extra") == 0)
-    count_mismatch = F.col("n_new") != F.col("n_old")
-    both_empty = (F.col("n_new") == 0) & (F.col("n_old") == 0)
-    row_mismatch = (F.col("missing") == 1) | (F.col("retyped") == 1)
-    ok = both_empty | (~count_mismatch & ~row_mismatch)
+    # name-set equality (order-only change detection, A4)
+    sets_equal = (extra(h_parts, c_parts) == 0) & (extra(c_parts, h_parts) == 0)
+    count_mismatch = F.size(h_parts) != F.size(c_parts)
+    both_empty = (F.size(h_parts) == 0) & (F.size(c_parts) == 0)
+    ok = both_empty | (~count_mismatch & ~(missing | retyped))
     reason = F.when(ok, F.lit(None)).otherwise(
         # count mismatch -> order flag is False (rule_book.py:120-122);
         # otherwise the quirky names_equal flag decides
@@ -186,9 +199,7 @@ def _partition_check(hql_parts: DataFrame, cat_parts: DataFrame) -> DataFrame:
             ~count_mismatch & sets_equal, F.lit("PartitionOrderValidationError")
         ).otherwise(F.lit("PartitionValidationError"))
     )
-    return base.select(
-        "file_path", ok.alias("part_ok"), reason.alias("part_reason")
-    )
+    return ok, reason
 
 
 def hive_diff(
@@ -212,59 +223,37 @@ def hive_diff(
     format_changed|iceberg. ``format_change`` may be set alongside
     outcome='iceberg' (migration tables land in both report lists,
     alterator.py:556-570).
+
+    The diff is keyed by file, not table: two DDL files naming the same
+    table (e.g. a stray non-CREATE statement) each get their own row and
+    cannot contaminate each other's lists.
     """
     cat_t = cat_tables.select(
         "table_name",
         F.col("format").alias("cat_format"),
         F.lit(True).alias("cat_exists"),
     )
-    base = parsed.join(F.broadcast(cat_t), "table_name", "left")
-
-    # --- column + partition sub-diffs (computed for parquet-routed tables)
+    base = with_catalog(parsed.join(F.broadcast(cat_t), "table_name", "left"), cat_cols)
     # NB: commented-out columns are NOT filtered here — the reference's
     # Hive column regex has no comment group (alterator.py:75-78), so a
     # `-- `col` type,` line still counts as a live column on this path
     # (commenting is an Iceberg-only concept).
-    hql_cols = parsed.select("file_path", F.explode("columns").alias("c")).select(
-        "file_path", "c.*"
+    part_ok, part_reason = _partition_check(F.col("hive_partitions"), F.col("cat"))
+    df = base.select(
+        "file_path",
+        "table_name",
+        "is_create",
+        "is_external",
+        "hql_format",
+        "cat_format",
+        "cat_exists",
+        _column_pairs(F.col("columns"), F.col("cat")).alias("pairs"),
+        part_ok.alias("part_ok"),
+        part_reason.alias("part_reason"),
     )
-    # fan catalog columns out per FILE so same-named tables in two
-    # files cannot contaminate each other's diff
-    fmap = parsed.select("file_path", "table_name").filter(
-        F.col("table_name").isNotNull()
-    )
-    # NOT pinned (r12, VERDICT-r11 task 2): the r11 lazy-localCheckpoint
-    # pin here was A/B'd same-session at local[32]/sf0.1 — pinned best
-    # 1.899-2.128 s / 18 jobs vs unpinned 1.825-1.932 s / 19 jobs,
-    # unpinned consistently ~5-10% faster. The fan-out is a cheap
-    # broadcast join over table-count-sized inputs, so the pin's
-    # materialization barrier costs more than the 2-consumer
-    # re-execution it saves (and it was the suspect in BENCH_r11's
-    # ddl_diff_bulk 0.705x). Reverted to the plain join.
-    cat_f = fmap.join(cat_cols, "table_name")
-    col_diff = _column_diff(
-        hql_cols.select("file_path", "pos", "name", "type", "backfilled_from"),
-        cat_f.select("file_path", "name", "type", "position"),
-    )
-    hql_parts = parsed.select(
-        "file_path", F.explode("hive_partitions").alias("p")
-    ).select("file_path", "p.*")
-    part = _partition_check(
-        hql_parts,
-        cat_f.filter(F.col("is_partition")).select(
-            "file_path", "name", "type", "position"
-        ),
-    )
-
-    df = (
-        base.join(col_diff, "file_path", "left")
-        .join(part, "file_path", "left")
-        .withColumn("add", F.coalesce("add", _empty_nt()))
-        .withColumn("delete", F.coalesce("delete", _empty_nt()))
-        .withColumn("compatible", F.coalesce("compatible", _empty_chg()))
-        .withColumn("incompatible", F.coalesce("incompatible", _empty_chg()))
-        .withColumn("part_ok", F.coalesce("part_ok", F.lit(True)))
-    )
+    df = df.select(
+        "*", *[v.alias(k) for k, v in _column_lists(F.col("pairs")).items()]
+    ).drop("pairs")
 
     has_incompat = F.size("incompatible") > 0
     has_changes = (

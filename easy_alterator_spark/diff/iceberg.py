@@ -1,16 +1,32 @@
-"""Iceberg-path schema diff, corpus-wide.
+"""Iceberg-path schema diff: each table is diffed inside its own row.
 
 Re-expresses the reference handler (iceberg_schema_handler.py:241-576)
-as DataFrame joins keyed by ``table_name``:
+the way :mod:`.hive` does: the catalog snapshot is one sorted array per
+table (:func:`.hive.with_catalog`), broadcast-joined with the catalog
+table row onto the parsed DDL, and every merge of the reference is a
+row-local higher-order expression:
 
-- J5 full outer on name      -> new columns + non-commented deletes
-- J6 inner on name           -> renames/deletes/updates base
-- J7 cat.name = hql.renamed_from -> renames
-- J10 full outer on field_id -> partition new/dropped/replaced
-- A5 property set algebra    -> map_* functions on the props maps
-- O3/O4 position cascade     -> lead() window for next-column, then the
-  per-table (tiny) topological sort via groupBy().applyInPandas over
-  :func:`easy_alterator_spark.ddl.position.plan_moves`
+- J6 inner join on name        -> ``common``: each DDL column paired
+                                  with its same-named catalog columns
+- J5 new columns (F9)          -> DDL columns no catalog column,
+                                  rename or backfill names
+- J12/F8 deletes               -> commented ``common`` columns + catalog
+                                  columns neither in the DDL nor renamed
+- J7 renames                   -> ``renamed_from`` matched to a catalog
+                                  column
+- F10 updates + F5             -> retyped ``common`` pairs split by
+                                  ``types.is_compatible_col``
+- first_col                    -> first type-unchanged ``-- first`` column
+- J10 partitions on field_id   -> :func:`.hive.outer_pairs` on field id
+                                  -> new / dropped / replaced
+- A5 property set algebra      -> ``map_*`` functions on the props maps
+- O2 migration sequence gate   -> (name, type) arrays in source order
+- O3/O4 position cascade       -> the catalog successor of each ``after``
+                                  target by array index, then the
+                                  per-table topological sort
+                                  (:func:`easy_alterator_spark.ddl.position.plan_moves`)
+                                  as an Arrow-batched pandas UDF on the
+                                  row: the one Python step of the diff
 
 Documented divergences from the reference (bit-rot fixed, see
 SURVEY.md §0/§7):
@@ -33,91 +49,46 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..ddl import types as TY
 from ..ddl.position import plan_moves
-
-_MOVES_SCHEMA = "table_name string, name string, after string, reason string, ord int"
-
-
-def _plan_moves_udf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-table cascade closure + topological ordering (driver logic
-    distributed per group — each group is tens of rows)."""
-    table = pdf["table_name"].iloc[0]
-    directives = dict(zip(pdf["name"], pdf["after"]))
-    changes = {
-        r["name"]: r["after"] for _, r in pdf.iterrows() if bool(r["is_valid_change"])
-    }
-    moves = plan_moves(directives, changes)
-    return pd.DataFrame(
-        [
-            {
-                "table_name": table,
-                "name": m["name"],
-                "after": m["after"],
-                "reason": m["reason"],
-                "ord": i,
-            }
-            for i, m in enumerate(moves)
-        ],
-        columns=["table_name", "name", "after", "reason", "ord"],
-    )
+from .hive import outer_pairs, side, sorted_by, with_catalog
 
 
-def _hql_columns(parsed: DataFrame) -> DataFrame:
-    """Exploded HQL column descriptors with Iceberg flags (F7) and the
-    comparison-vocabulary type normalization (P7) applied for
-    non-migration tables (iceberg_schema_handler.py:84-97). Expects a
-    ``requires_migration`` column on ``parsed``."""
-    c = parsed.select(
-        "table_name", "requires_migration", F.explode("columns").alias("c")
-    )
-    return c.select(
-        "table_name",
-        "requires_migration",
-        F.col("c.pos").alias("pos"),
-        F.col("c.name").alias("name"),
-        F.when(
-            F.col("requires_migration"), F.col("c.type")
-        ).otherwise(TY.normalize_iceberg_ddl_type_col(F.col("c.type"))).alias("type"),
-        F.col("c.commented").alias("is_deleted"),
-        F.col("c.renamed_from").isNotNull().alias("is_renamed"),
-        F.col("c.renamed_from").alias("renamed_from"),
-        F.col("c.after").isNotNull().alias("is_after"),
-        F.col("c.after").alias("after"),
-        F.col("c.backfilled_from").alias("backfilled_from"),
-        F.col("c.first").alias("is_first"),
-    )
+_MOVES_T = T.ArrayType(
+    T.StructType([T.StructField(f, T.StringType()) for f in ("name", "after", "reason")])
+)
 
 
-def _cat_columns(cat_cols: DataFrame, migration: DataFrame) -> DataFrame:
-    """Catalog columns in comparison vocabulary.
+@F.pandas_udf(_MOVES_T)
+def _plan_moves_udf(cands: pd.Series) -> pd.Series:
+    """Each table's cascade closure + topological order of its moves, or
+    NULL when there are none (tens of columns per table)."""
 
-    Live Iceberg tables: schema fields only (partition *sources* are
-    already schema fields), types mapped iceberg->spark
-    (rule_book.py:336-339). Migration (still-Hive) tables: data columns
-    + partition keys, raw Hive types, ids synthesized 1..n in that
-    order (iceberg_schema_handler.py:153-172)."""
-    c = cat_cols.join(migration, "table_name").filter(
-        ~F.col("is_partition") | F.col("requires_migration")
-    )
-    w = Window.partitionBy("table_name").orderBy(
-        F.col("is_partition").cast("int"), "position"
-    )
-    return c.select(
-        "table_name",
-        F.lower("name").alias("name"),
-        F.when(
-            F.col("requires_migration"), F.col("type")
-        ).otherwise(TY.iceberg_to_spark_type_col(F.col("type"))).alias("type"),
-        F.when(F.col("requires_migration"), F.row_number().over(w) - 1)
-        .otherwise(F.col("position"))
-        .alias("position"),
-        F.when(F.col("requires_migration"), F.row_number().over(w)).otherwise(
-            F.col("field_id")
-        ).alias("id"),
-    )
+    def moves(cs):
+        directives = {c["name"]: c["after"] for c in cs}
+        changes = {c["name"]: c["after"] for c in cs if c["valid"]}
+        return plan_moves(directives, changes) or None
+
+    return pd.Series([moves(cs) if len(cs) else None for cs in cands])
+
+
+_COMMON_FIELDS = ("pos", "name", "type", "is_deleted", "after", "backfilled_from", "is_first")
+
+
+def _only_if(cond: Column, arr: Column) -> Column:
+    """``arr`` where ``cond`` holds, else an empty array of its type."""
+    return F.filter(arr, lambda _: F.coalesce(cond, F.lit(False)))
+
+
+def _has(arr: Column, field: str, value: Column) -> Column:
+    return F.size(F.filter(arr, lambda x: x[field] == value)) > 0
+
+
+def _nonempty(arr: Column) -> Column:
+    return F.when(F.size(arr) > 0, arr)
 
 
 def iceberg_diff(
@@ -138,343 +109,319 @@ def iceberg_diff(
     # same table, keep the lexically-last file deterministically (the
     # hive path is file-keyed and reports both)
     w = Window.partitionBy("table_name").orderBy(F.col("file_path").desc())
-    routed = (
-        parsed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("table_name", "columns", "iceberg_partitions", "tblprops")
-    )
-    migration = cat_tables.select(
-        "table_name", (F.col("format") != "ICEBERG").alias("requires_migration")
-    )
-    hql = _hql_columns(routed.join(F.broadcast(migration), "table_name"))
-    cat = _cat_columns(cat_cols, migration)
-
-    # --- J6 inner join base -------------------------------------------
-    common = hql.join(
-        cat.select("table_name", "name", F.col("type").alias("type_old"), "position", "id"),
-        ["table_name", "name"],
-        "inner",
-    )
-
-    # deletes: commented & present in catalog, plus catalog columns
-    # absent from the DDL that are not rename sources (J12/F8)
-    commented_deletes = common.filter(F.col("is_deleted")).select(
-        "table_name", "pos", "name"
-    )
-    rename_sources = hql.filter(F.col("renamed_from").isNotNull()).select(
-        "table_name", F.col("renamed_from").alias("name")
-    )
-    absent = (
-        cat.select("table_name", "name", "position")
-        .join(hql.select("table_name", "name"), ["table_name", "name"], "left_anti")
-        .join(rename_sources, ["table_name", "name"], "left_anti")
-        .select("table_name", (F.col("position") + 100000).alias("pos"), "name")
-    )
-    deletes = commented_deletes.unionByName(absent)
-
-    # --- J7 renames ----------------------------------------------------
-    renames = (
-        cat.select("table_name", F.col("name").alias("old_name"))
-        .join(
-            hql.filter(F.col("renamed_from").isNotNull()).select(
-                "table_name",
-                "pos",
-                F.col("renamed_from").alias("old_name"),
-                F.col("name").alias("new_name"),
+    routed = parsed.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
+    tables = cat_tables.select(
+        "table_name",
+        (F.col("format") != "ICEBERG").alias("requires_migration"),
+        F.lit(True).alias("in_cat"),
+        F.map_filter(
+            F.coalesce(
+                F.col("properties").cast("map<string,string>"),
+                F.create_map().cast("map<string,string>"),
             ),
-            ["table_name", "old_name"],
-            "inner",
+            lambda k, _: k != "owner",
+        ).alias("cp"),
+    )
+    base = with_catalog(routed.join(F.broadcast(tables), "table_name", "left"), cat_cols)
+    rm = F.col("requires_migration")
+    in_cat = F.coalesce("in_cat", F.lit(False))
+
+    # --- both sides in comparison vocabulary ---------------------------
+    # DDL columns with Iceberg flags (F7), types normalized (P7) unless
+    # the table still is Hive (iceberg_schema_handler.py:84-97)
+    hql = F.transform(
+        "columns",
+        lambda c: F.struct(
+            c["pos"].alias("pos"),
+            c["name"].alias("name"),
+            F.when(rm, c["type"])
+            .otherwise(TY.normalize_iceberg_ddl_type_col(c["type"]))
+            .alias("type"),
+            c["commented"].alias("is_deleted"),
+            c["renamed_from"].alias("renamed_from"),
+            c["after"].alias("after"),
+            c["backfilled_from"].alias("backfilled_from"),
+            c["first"].alias("is_first"),
+        ),
+    )
+    # Live Iceberg tables: schema fields only (partition *sources* are
+    # already schema fields), types mapped iceberg->spark
+    # (rule_book.py:336-339). Migration (still-Hive) tables: data
+    # columns + partition keys, raw Hive types, positions 0..n-1 in that
+    # order (iceberg_schema_handler.py:153-172).
+    cat = F.transform(
+        F.filter("cat", lambda c: ~c["is_partition"] | rm),
+        lambda c, i: F.struct(
+            F.lower(c["name"]).alias("name"),
+            F.when(rm, c["type"]).otherwise(TY.iceberg_to_spark_type_col(c["type"])).alias("type"),
+            F.when(rm, i).otherwise(c["position"]).alias("position"),
+        ),
+    )
+    # partition fields; a migration table's get ids 1000.. in order
+    cat_parts = F.transform(
+        F.filter("cat", lambda c: c["is_partition"]),
+        lambda c, j: F.struct(
+            F.lower(c["name"]).alias("name"),
+            F.when(rm, j + 1000).otherwise(c["field_id"]).alias("field_id"),
+        ),
+    )
+    sides = base.select(
+        "table_name",
+        "requires_migration",
+        in_cat.alias("in_cat"),
+        _only_if(in_cat, hql).alias("hql"),
+        _only_if(in_cat, cat).alias("cat"),
+        _only_if(in_cat, cat_parts).alias("cat_parts"),
+        # ids were assigned before the filter
+        F.filter("iceberg_partitions", lambda p: ~p["commented"]).alias("hql_parts"),
+        F.coalesce("tblprops", F.create_map().cast("map<string,string>")).alias("hp"),
+        F.coalesce("cp", F.create_map().cast("map<string,string>")).alias("cp"),
+    )
+    hql, cat = F.col("hql"), F.col("cat")
+
+    # --- J6: DDL columns paired with same-named catalog columns ---------
+    common = F.flatten(
+        F.transform(
+            hql,
+            lambda h: F.transform(
+                F.filter(cat, lambda c: c["name"] == h["name"]),
+                lambda c: F.struct(
+                    *[h[f].alias(f) for f in _COMMON_FIELDS], c["type"].alias("type_old")
+                ),
+            ),
         )
     )
+    # --- J10: partition fields outer-joined on field id -----------------
+    part_pairs = outer_pairs(
+        F.col("hql_parts"),
+        F.col("cat_parts"),
+        lambda h, c: h["field_id"] == c["field_id"],
+        lambda h, c: F.struct(
+            (h if h is not None else c)["field_id"].alias("field_id"),
+            side(h, "name").alias("name_new"),
+            side(h, "expr").alias("expr"),
+            side(c, "name").alias("name_old"),
+        ),
+    )
+    joined = sides.select("*", common.alias("common"), part_pairs.alias("part_pairs"))
+    common = F.col("common")
 
     # --- F10 type updates + F5 compatibility ---------------------------
-    updated = common.filter(F.col("type_old") != F.col("type")).select(
-        "table_name",
-        "pos",
-        "name",
-        F.col("type_old").alias("old_type"),
-        F.col("type").alias("new_type"),
-        "backfilled_from",
-        TY.is_compatible_col(F.col("type_old"), F.col("type"), "iceberg").alias("compat"),
+    updated = F.transform(
+        F.filter(common, lambda p: p["type_old"] != p["type"]),
+        lambda p: F.struct(
+            p["pos"].alias("pos"),
+            p["name"].alias("name"),
+            p["type_old"].alias("old_type"),
+            p["type"].alias("new_type"),
+            p["backfilled_from"].alias("backfilled_from"),
+            TY.is_compatible_col(p["type_old"], p["type"], "iceberg").alias("compat"),
+        ),
     )
-
     # --- position updates (O3/O4) --------------------------------------
-    # candidates: existing, type-unchanged, has `after`, not deleted (F11)
-    after_cand = common.filter(
-        (F.col("type_old") == F.col("type")) & F.col("is_after") & ~F.col("is_deleted")
-    ).select("table_name", "name", "after")
-    # current next-column per catalog order (O4): lead over position
-    nxt = cat.select(
-        "table_name",
-        F.col("name").alias("after"),
-        F.lead("name")
-        .over(Window.partitionBy("table_name").orderBy("position"))
-        .alias("current_next"),
-    )
-    # valid change: the after-target exists in the catalog AND the column
-    # isn't already right after it (J11)
-    target_in_cat = after_cand.join(
-        cat.select("table_name", F.col("name").alias("after")).distinct(),
-        ["table_name", "after"],
-        "left_semi",
-    )
-    valid_changes = target_in_cat.join(nxt, ["table_name", "after"], "left").filter(
-        F.col("current_next").isNull() | (F.col("current_next") != F.col("name"))
-    )
-    cascade_input = after_cand.join(
-        valid_changes.select("table_name", "name", F.lit(True).alias("is_valid_change")),
-        ["table_name", "name"],
-        "left",
-    ).na.fill({"is_valid_change": False})
-    moves = (
-        cascade_input.groupBy("table_name")
-        .applyInPandas(_plan_moves_udf, _MOVES_SCHEMA)
-    )
+    # candidates: existing, type-unchanged, has `after`, not deleted
+    # (F11); valid when the target is a catalog column and the column is
+    # not already its catalog successor (J11)
+    def valid(a: Column) -> Column:
+        succ = F.transform(
+            cat,
+            lambda c, i: (c["name"] == a["after"])
+            & (F.get(cat, i + 1)["name"].isNull() | (F.get(cat, i + 1)["name"] != a["name"])),
+        )
+        return F.coalesce(F.exists(succ, lambda x: x), F.lit(False))
 
-    first_cols = (
-        common.filter((F.col("type_old") == F.col("type")) & F.col("is_first"))
-        .groupBy("table_name")
-        .agg(F.min_by("name", "pos").alias("first_col"))
+    cands = F.transform(
+        F.filter(
+            common,
+            lambda p: (p["type_old"] == p["type"]) & p["after"].isNotNull() & ~p["is_deleted"],
+        ),
+        lambda p: F.struct(p["name"].alias("name"), p["after"].alias("after"), valid(p).alias("valid")),
     )
-
+    # --- deletes: commented & present in catalog, plus catalog columns
+    # absent from the DDL that are not rename sources (J12/F8) ----------
+    deletes = F.concat(
+        F.transform(
+            F.filter(common, lambda p: p["is_deleted"]),
+            lambda p: F.struct(p["pos"].alias("o"), p["name"].alias("p")),
+        ),
+        F.transform(
+            F.filter(
+                cat,
+                lambda c: ~_has(hql, "name", c["name"]) & ~_has(hql, "renamed_from", c["name"]),
+            ),
+            lambda c: F.struct((c["position"] + 100000).alias("o"), c["name"].alias("p")),
+        ),
+    )
+    # --- J7 renames ----------------------------------------------------
+    renames = F.flatten(
+        F.transform(
+            F.filter(hql, lambda h: h["renamed_from"].isNotNull()),
+            lambda h: F.transform(
+                F.filter(cat, lambda c: c["name"] == h["renamed_from"]),
+                lambda c: F.struct(
+                    h["pos"].alias("o"),
+                    F.struct(c["name"].alias("old_name"), h["name"].alias("new_name")).alias("p"),
+                ),
+            ),
+        )
+    )
     # --- new columns (F9) ----------------------------------------------
-    backfill_targets = hql.filter(F.col("backfilled_from").isNotNull()).select(
-        "table_name", F.col("backfilled_from").alias("name")
+    new_cols = sorted_by(
+        hql,
+        lambda h: ~h["is_deleted"]
+        & h["renamed_from"].isNull()
+        & ~_has(cat, "name", h["name"])
+        & ~_has(hql, "backfilled_from", h["name"]),
+        lambda h: h["pos"],
+        lambda h: F.struct(
+            h["name"].alias("name"),
+            h["type"].alias("type"),
+            h["after"].alias("after"),
+            h["is_first"].alias("first"),
+        ),
     )
-    new_cols = (
-        hql.filter(~F.col("is_deleted") & F.col("renamed_from").isNull())
-        .join(cat.select("table_name", "name"), ["table_name", "name"], "left_anti")
-        .join(backfill_targets, ["table_name", "name"], "left_anti")
-        .select("table_name", "pos", "name", "type", "after", F.col("is_first").alias("first"))
+    first_col = F.get(
+        sorted_by(
+            common,
+            lambda p: (p["type_old"] == p["type"]) & p["is_first"],
+            lambda p: p["pos"],
+            lambda p: p["name"],
+        ),
+        0,
     )
+    # --- migration sequence gate (O2) ----------------------------------
+    def sequence(arr: Column, order: str) -> Column:
+        return sorted_by(
+            arr, lambda x: F.lit(True), lambda x: x[order],
+            lambda x: F.struct(x["name"].alias("name"), x["type"].alias("type")),
+        )
 
     # --- partition diff (J10) ------------------------------------------
-    hql_parts = (
-        routed.select("table_name", F.explode("iceberg_partitions").alias("p"))
-        .select("table_name", "p.*")
-        .filter(~F.col("commented"))  # ids assigned before the filter
-    )
-    cat_parts = (
-        cat_cols.join(F.broadcast(migration), "table_name")
-        .filter(F.col("is_partition"))
-        .select(
-            "table_name",
-            F.lower("name").alias("name"),
-            F.when(
-                F.col("requires_migration"),
-                F.row_number().over(
-                    Window.partitionBy("table_name").orderBy("position")
-                ) + 999,
-            ).otherwise(F.col("field_id")).alias("field_id"),
-        )
-    )
-    pj = (
-        hql_parts.select(
-            "table_name", "field_id", F.col("name").alias("name_new"), "expr"
-        )
-        .join(
-            cat_parts.select("table_name", "field_id", F.col("name").alias("name_old")),
-            ["table_name", "field_id"],
-            "full_outer",
-        )
-    )
-    part_agg = pj.groupBy("table_name").agg(
+    pp = F.col("part_pairs")
+    has_parts = F.col("table_name").isNotNull() & (F.size(pp) > 0)
+    part_new = F.array_sort(
         F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("name_old").isNull(),
-                        F.struct(
-                            F.col("field_id"),
-                            F.col("name_new").alias("name"),
-                            F.col("expr"),
-                        ),
-                    )
-                )
+            F.filter(pp, lambda p: p["name_old"].isNull()),
+            lambda p: F.struct(
+                p["field_id"].alias("field_id"), p["name_new"].alias("name"), p["expr"].alias("expr")
             ),
-            lambda s: s,
-        ).alias("part_new"),
-        F.collect_list(F.when(F.col("name_new").isNull(), F.col("name_old"))).alias(
-            "part_dropped"
+        )
+    )
+    part_dropped = F.transform(
+        F.filter(pp, lambda p: p["name_new"].isNull() & p["name_old"].isNotNull()),
+        lambda p: p["name_old"],
+    )
+    part_replaced = F.transform(
+        F.filter(
+            pp,
+            lambda p: p["name_old"].isNotNull()
+            & p["name_new"].isNotNull()
+            & (p["name_old"] != p["name_new"]),
         ),
-        F.collect_list(
-            F.when(
-                F.col("name_old").isNotNull()
-                & F.col("name_new").isNotNull()
-                & (F.col("name_old") != F.col("name_new")),
-                F.struct(
-                    F.col("name_old").alias("old_name"),
-                    F.col("name_new").alias("new_name"),
-                    # carry the parsed transform expr: Iceberg's
-                    # REPLACE ... WITH clause needs the expression
-                    # (months(`ts`)), not the derived field name
-                    F.col("expr"),
-                ),
-            )
-        ).alias("part_replaced"),
+        lambda p: F.struct(
+            p["name_old"].alias("old_name"),
+            p["name_new"].alias("new_name"),
+            # carry the parsed transform expr: Iceberg's REPLACE ...
+            # WITH clause needs the expression (months(`ts`)), not the
+            # derived field name
+            p["expr"].alias("expr"),
+        ),
     )
 
     # --- tblprops (A5) --------------------------------------------------
     default_props = F.array(*[F.lit(p) for p in TY.ICEBERG_DEFAULT_PROPS])
-    props = (
-        routed.select("table_name", "tblprops")
-        .join(
-            cat_tables.select(
-                "table_name",
-                F.map_filter(
-                    F.coalesce(
-                        F.col("properties").cast("map<string,string>"),
-                        F.create_map().cast("map<string,string>"),
-                    ),
-                    lambda k, _: k != "owner",
-                ).alias("cat_props"),
-            ),
-            "table_name",
-            "left",
-        )
-        .join(F.broadcast(migration), "table_name")
-        .select(
-            "table_name",
-            F.coalesce("tblprops", F.create_map().cast("map<string,string>")).alias("hp"),
-            F.coalesce("cat_props", F.create_map().cast("map<string,string>")).alias("cp"),
-            "requires_migration",
-        )
+    props_as_is = rm | (F.size(F.map_keys("hp")) == 0) | (F.size(F.map_keys("cp")) == 0)
+
+    def props(expr: Column, as_is: Column) -> Column:
+        return F.when(F.col("in_cat"), F.when(props_as_is, as_is).otherwise(expr))
+
+    missing_backfill = sorted_by(
+        F.col("updated"),
+        lambda u: ~u["compat"] & u["backfilled_from"].isNull(),
+        lambda u: u["pos"],
+        lambda u: u["name"],
     )
-    both_present = (F.size(F.map_keys("hp")) > 0) & (F.size(F.map_keys("cp")) > 0)
-    props = props.select(
+    out = joined.select(
         "table_name",
-        F.when(
-            F.col("requires_migration") | ~both_present, F.col("hp")
-        ).otherwise(
-            F.map_filter(F.col("hp"), lambda k, _: ~F.array_contains(F.map_keys("cp"), k))
-        ).alias("props_new"),
-        F.when(
-            F.col("requires_migration") | ~both_present,
-            F.array().cast("array<string>"),
-        ).otherwise(
-            F.filter(
-                F.map_keys("cp"),
-                lambda k: ~F.array_contains(default_props, k)
-                & ~F.array_contains(F.map_keys("hp"), k),
-            )
-        ).alias("props_removed"),
-        F.when(
-            F.col("requires_migration") | ~both_present,
-            F.create_map().cast("map<string,string>"),
-        ).otherwise(
-            F.map_filter(
-                F.col("hp"),
-                lambda k, v: F.array_contains(F.map_keys("cp"), k)
-                & (v != F.element_at(F.col("cp"), k)),
-            )
-        ).alias("props_updated"),
+        "requires_migration",
+        "in_cat",
+        "hp",
+        "cp",
+        "hql",
+        "cat",
+        updated.alias("updated"),
+        cands.alias("cands"),
+        deletes.alias("deletes"),
+        renames.alias("renames"),
+        new_cols.alias("new_cols"),
+        first_col.alias("first_col"),
+        F.when(has_parts, part_new).alias("part_new"),
+        F.when(has_parts, part_dropped).alias("part_dropped"),
+        F.when(has_parts, part_replaced).alias("part_replaced"),
     )
-
-    # --- migration sequence gate (O2) ----------------------------------
-    hql_seq = hql.groupBy("table_name").agg(
-        F.array_sort(
-            F.collect_list(F.struct("pos", F.struct("name", "type").alias("nt")))
-        ).alias("hs")
-    ).select("table_name", F.transform("hs", lambda s: s["nt"]).alias("hs"))
-    cat_seq = cat.groupBy("table_name").agg(
-        F.array_sort(
-            F.collect_list(F.struct("position", F.struct("name", "type").alias("nt")))
-        ).alias("cs")
-    ).select("table_name", F.transform("cs", lambda s: s["nt"]).alias("cs"))
-    seq = (
-        hql_seq.join(cat_seq, "table_name", "full_outer")
-        .join(F.broadcast(migration), "table_name")
-        .select(
-            "table_name",
-            (
-                F.col("requires_migration")
-                & (
-                    F.coalesce("hs", F.array()) != F.coalesce("cs", F.array())
-                )
-            ).alias("sequence_mismatch"),
-        )
-    )
-
-    # --- per-table aggregation ------------------------------------------
-    def sorted_structs(df: DataFrame, payload: Column, order: Column, name: str) -> DataFrame:
-        arr = F.array_sort(F.collect_list(F.struct(order.alias("o"), payload.alias("p"))))
-        return df.groupBy("table_name").agg(
-            F.transform(arr, lambda s: s["p"]).alias(name)
-        )
-
-    agg_new = sorted_structs(
-        new_cols,
-        F.struct("name", "type", "after", "first"),
-        F.col("pos"),
-        "new_cols",
-    )
-    agg_del = sorted_structs(deletes, F.col("name"), F.col("pos"), "dropped")
-    agg_ren = sorted_structs(
-        renames,
-        F.struct("old_name", "new_name"),
-        F.col("pos"),
-        "renamed",
-    )
-    agg_compat = sorted_structs(
-        updated.filter(F.col("compat")),
-        F.struct("name", "old_type", "new_type"),
-        F.col("pos"),
-        "compatible",
-    )
-    agg_incompat = sorted_structs(
-        updated.filter(~F.col("compat")),
-        F.struct("name", "old_type", "new_type", "backfilled_from"),
-        F.col("pos"),
-        "incompatible",
-    )
-    agg_moves = sorted_structs(
-        moves, F.struct("name", "after", "reason"), F.col("ord"), "position_changes"
-    )
-    backfill_err = (
-        updated.filter(~F.col("compat") & F.col("backfilled_from").isNull())
-        .groupBy("table_name")
-        .agg(F.collect_list("name").alias("missing_backfill"))
-    )
-
-    out = (
-        routed.select("table_name")
-        .distinct()
-        .join(F.broadcast(migration), "table_name", "left")
-        .join(seq.drop("requires_migration"), "table_name", "left")
-        .join(agg_new, "table_name", "left")
-        .join(agg_del, "table_name", "left")
-        .join(agg_ren, "table_name", "left")
-        .join(agg_compat, "table_name", "left")
-        .join(agg_incompat, "table_name", "left")
-        .join(agg_moves, "table_name", "left")
-        .join(first_cols, "table_name", "left")
-        .join(part_agg, "table_name", "left")
-        .join(props, "table_name", "left")
-        .join(backfill_err, "table_name", "left")
-    )
+    upd = F.col("updated")
     return out.select(
         "table_name",
         F.concat(F.lit(catalog_name + "."), "table_name").alias("full_name"),
-        F.coalesce("requires_migration", F.lit(False)).alias("requires_migration"),
-        F.coalesce("sequence_mismatch", F.lit(False)).alias("sequence_mismatch"),
+        F.coalesce(rm, F.lit(False)).alias("requires_migration"),
+        F.coalesce(rm & (sequence(hql, "pos") != sequence(cat, "position")), F.lit(False)).alias(
+            "sequence_mismatch"
+        ),
         F.when(
-            F.col("missing_backfill").isNotNull(),
+            F.size(missing_backfill) > 0,
             F.concat(
                 F.lit("backfilled_from is missing for column in DDL file for: "),
-                F.concat_ws(", ", "missing_backfill"),
+                F.concat_ws(", ", missing_backfill),
             ),
         ).alias("error"),
-        "new_cols",
-        "dropped",
-        "renamed",
-        "compatible",
-        "incompatible",
-        "position_changes",
+        _nonempty(F.col("new_cols")).alias("new_cols"),
+        _nonempty(F.transform(F.array_sort("deletes"), lambda s: s["p"])).alias("dropped"),
+        _nonempty(F.transform(F.array_sort("renames"), lambda s: s["p"])).alias("renamed"),
+        _nonempty(
+            sorted_by(
+                upd,
+                lambda u: u["compat"],
+                lambda u: u["pos"],
+                lambda u: F.struct(
+                    u["name"].alias("name"), u["old_type"].alias("old_type"), u["new_type"].alias("new_type")
+                ),
+            )
+        ).alias("compatible"),
+        _nonempty(
+            sorted_by(
+                upd,
+                lambda u: ~u["compat"],
+                lambda u: u["pos"],
+                lambda u: F.struct(
+                    u["name"].alias("name"),
+                    u["old_type"].alias("old_type"),
+                    u["new_type"].alias("new_type"),
+                    u["backfilled_from"].alias("backfilled_from"),
+                ),
+            )
+        ).alias("incompatible"),
+        _plan_moves_udf("cands").alias("position_changes"),
         "first_col",
         "part_new",
         "part_dropped",
         "part_replaced",
-        "props_new",
-        "props_removed",
-        "props_updated",
+        props(
+            F.map_filter("hp", lambda k, _: ~F.array_contains(F.map_keys("cp"), k)), F.col("hp")
+        ).alias("props_new"),
+        props(
+            F.filter(
+                F.map_keys("cp"),
+                lambda k: ~F.array_contains(default_props, k)
+                & ~F.array_contains(F.map_keys("hp"), k),
+            ),
+            F.array().cast("array<string>"),
+        ).alias("props_removed"),
+        props(
+            F.map_filter(
+                "hp",
+                lambda k, v: F.array_contains(F.map_keys("cp"), k)
+                & (v != F.element_at(F.col("cp"), k)),
+            ),
+            F.create_map().cast("map<string,string>"),
+        ).alias("props_updated"),
     )

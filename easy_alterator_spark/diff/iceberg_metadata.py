@@ -51,6 +51,17 @@ def parse_metadata(meta: dict[str, Any], table_name: str) -> tuple[list, dict]:
     return rows, props
 
 
+def _path_key(spark: SparkSession, path: str, is_uri: bool = False) -> str:
+    """One spelling per file: Hadoop's qualified, decoded path.
+
+    ``input_file_name`` returns an encoded URI (``file:///a%20b/v1.json``)
+    while a metadata_location is a plain path or URI (``/a b/v1.json``,
+    ``s3://b/v1.json``); both sides map to the same key."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(path) if is_uri else path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).makeQualified(p).toString()
+
+
 def read_metadata_files(
     spark: SparkSession, locations: dict[str, str]
 ) -> tuple[DataFrame, dict[str, dict[str, str]]]:
@@ -59,23 +70,19 @@ def read_metadata_files(
     Hadoop-visible filesystem."""
     if not locations:
         return spark.createDataFrame([], _COLS_SCHEMA), {}
-    by_path = {v: k for k, v in locations.items()}
     texts = (
         spark.read.text(list(locations.values()), wholetext=True)
         .selectExpr("input_file_name() as path", "value")
         .collect()
     )
+    contents = {_path_key(spark, r["path"], is_uri=True): r["value"] for r in texts}
     rows: list = []
     props: dict[str, dict[str, str]] = {}
-    for r in texts:
-        # input_file_name returns a URI; match on suffix
-        table = next(
-            (t for p, t in by_path.items() if r["path"].endswith(p.lstrip("file:"))),
-            None,
-        )
-        if table is None:
+    for table, loc in locations.items():
+        text = contents.get(_path_key(spark, loc))
+        if text is None:
             continue
-        t_rows, t_props = parse_metadata(json.loads(r["value"]), table)
+        t_rows, t_props = parse_metadata(json.loads(text), table)
         rows.extend(t_rows)
         props[table] = t_props
     return spark.createDataFrame(rows, _COLS_SCHEMA), props

@@ -97,3 +97,44 @@ def test_read_via_spark_and_diff(spark, meta_file):
     assert "updated" not in e["columns"] or "compatible" not in e["columns"].get("updated", {})
     assert "new" not in e["columns"]
     assert "partition_columns" not in e
+
+
+def test_metadata_paths_match_exactly(spark):
+    """A location that is a suffix of another's path must not capture
+    the other table's file; both sides meet in one spelling."""
+    from easy_alterator_spark.diff.iceberg_metadata import _path_key
+
+    locations = {"db.a": "/x/metadata/v1.json", "db.b": "/data/x/metadata/v1.json"}
+    by_key = {_path_key(spark, loc): t for t, loc in locations.items()}
+    assert by_key[_path_key(spark, "file:///data/x/metadata/v1.json", is_uri=True)] == "db.b"
+    assert by_key[_path_key(spark, "file:///x/metadata/v1.json", is_uri=True)] == "db.a"
+
+
+def test_read_nested_and_encoded_locations(spark, tmp_path):
+    """Nested locations, a ``file:`` URI and a directory name that
+    ``input_file_name`` percent-encodes each read their own file."""
+    from easy_alterator_spark.diff.iceberg_metadata import read_metadata_files
+
+    files = {
+        "db.a": tmp_path / "x" / "metadata" / "v1.json",
+        "db.b": tmp_path / "data" / "x" / "metadata" / "v1.json",
+        "db.c": tmp_path / "lake dir" / "t" / "m.json",
+    }
+    for table, path in files.items():
+        meta = {
+            "current-schema-id": 0,
+            "schemas": [{"schema-id": 0, "fields": [
+                {"id": 1, "name": "f_" + table[-1], "required": False, "type": "string"}
+            ]}],
+        }
+        path.parent.mkdir(parents=True)
+        path.write_text(json.dumps(meta))
+    locations = {t: str(p) for t, p in files.items()}
+    locations["db.b"] = "file://" + locations["db.b"]
+    cat_cols, props = read_metadata_files(spark, locations)
+    assert sorted((r["table_name"], r["name"]) for r in cat_cols.collect()) == [
+        ("db.a", "f_a"),
+        ("db.b", "f_b"),
+        ("db.c", "f_c"),
+    ]
+    assert set(props) == {"db.a", "db.b", "db.c"}

@@ -94,6 +94,51 @@ class TestJoinStrategy:
             assert jc["CartesianProduct"] == 0, name
 
 
+class TestSchemaDiffPlanShape:
+    """Each schema diff runs as a few exchanges over table-count-sized
+    inputs, each table diffed inside its row: one shuffle per groupBy or
+    window, one broadcast per catalog side. A join per reference merge
+    shows up here as dozens. Counted in the final AQE plan, which host
+    steal cannot move."""
+
+    MAX_EXCHANGES = 4
+
+    @staticmethod
+    def _exchanges(df) -> dict[str, int]:
+        import re
+
+        from easy_alterator_spark.plans.audit import executed_plan
+
+        final = executed_plan(df).split("== Initial Plan ==")[0]
+        return {
+            "shuffle": len(re.findall(r"(?<!\w)Exchange\b", final)),
+            "broadcast": final.count("BroadcastExchange"),
+        }
+
+    @pytest.fixture(scope="class")
+    def diffs(self, spark):
+        from easy_alterator_spark.diff import hive_diff, iceberg_diff
+
+        from .test_diff_goldens import _frames
+        from .test_schema_diff import CAT_COLS, CAT_TABLES, DDLS
+
+        parsed, cat_cols, cat_tables = _frames(spark, DDLS, CAT_COLS, CAT_TABLES)
+        outcomes = hive_diff(parsed, cat_cols, cat_tables)
+        ice_tables = [
+            r["table_name"]
+            for r in outcomes.filter("outcome = 'iceberg'").select("table_name").collect()
+        ]
+        ice = iceberg_diff(
+            parsed.filter(parsed.table_name.isin(ice_tables)), cat_cols, cat_tables
+        )
+        return {"hive_diff": outcomes, "iceberg_diff": ice}
+
+    @pytest.mark.parametrize("name", ["hive_diff", "iceberg_diff"])
+    def test_diff_is_a_few_exchanges(self, diffs, name):
+        n = self._exchanges(diffs[name])
+        assert n["shuffle"] + n["broadcast"] <= self.MAX_EXCHANGES, (name, n)
+
+
 class TestTrainingDataOps:
     def test_sample_filter_pushes_into_scan(self, spark, queries):
         """The md5-bucket sample must be a scan-level filter — a sample
