@@ -6,30 +6,41 @@ catalog in tests and a Glue-backed catalog in production (the catalog
 implementation is a config swap — ``spark.sql.catalog.*`` settings —
 not a code change).
 
-Catalog *reads* produce the FIXTURES.md B2/B3 DataFrames the diff
-engine consumes; catalog *writes* stay driver-side sequential (DDL is
-a metadata operation; never issue it from executors — SURVEY.md §4.2).
+One reader, :func:`_describe`, serves the snapshot (the FIXTURES.md
+B2/B3 DataFrames the diff engine consumes) and the version digest: two
+round trips per table, ``tableExists`` then ``DESCRIBE TABLE EXTENDED
+… AS JSON`` — the counterpart of the reference's one ``get_table``
+response (typed columns, partition columns, provider, Hive storage
+classes, properties as a map). Catalog *writes* stay driver-side
+sequential (DDL is a metadata operation; never issue it from executors
+— SURVEY.md §4.2).
 
 For live ICEBERG tables the column snapshot comes from the table's
-``metadata.json`` (via :mod:`.iceberg_metadata`), NOT from
-``listColumns``: the iceberg diff joins partition specs on Iceberg
-*field ids*, which only the metadata file carries — a listColumns
-snapshot would emit ``field_id = NULL`` and make every partition field
-look simultaneously new and dropped (reference reads the same file,
+``metadata.json`` (via :mod:`.iceberg_metadata`), NOT from the
+describe: the iceberg diff joins partition specs on Iceberg *field
+ids*, which only the metadata file carries — a describe-based snapshot
+would emit ``field_id = NULL`` and make every partition field look
+simultaneously new and dropped (reference reads the same file,
 iceberg_schema_handler.py:131-151).
 """
 
 from __future__ import annotations
 
-import re
+import hashlib
+import json
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-_COLS_SCHEMA = (
+from ..session import GLUE_FACTORY_KEY
+
+# The snapshot frames' schemas (FIXTURES.md B2/B3); every producer of
+# a catalog snapshot, live or fixture, builds its frames from these.
+COLS_SCHEMA = (
     "table_name string, name string, type string, position int, "
     "is_partition boolean, field_id int"
 )
-_TABLES_SCHEMA = (
+TABLES_SCHEMA = (
     "table_name string, table_type string, format string, "
     "metadata_location string, properties map<string,string>, version_id string"
 )
@@ -38,53 +49,53 @@ _TABLES_SCHEMA = (
 # Hive parquet triple — a 'hive'-provider table is only PARQUET when
 # its storage handler actually is; CSV/ORC/Avro Hive tables must route
 # to non_parquet/format_changed, not into the ALTER path.
-_PARQUET_INPUT = "org.apache.hadoop.hive.ql.io.parquet.MapredParquetInputFormat"
-_PARQUET_OUTPUT = "org.apache.hadoop.hive.ql.io.parquet.MapredParquetOutputFormat"
-_PARQUET_SERDE = "org.apache.hadoop.hive.ql.io.parquet.serde.ParquetHiveSerDe"
-
-# InputFormat class-name fragment -> diff-vocabulary format token.
-_INPUT_FORMAT_TOKENS = (
-    ("orc", "ORC"),
-    ("avro", "AVRO"),
-    ("sequencefile", "SEQUENCEFILE"),
-    ("text", "TEXT"),
+_PARQUET_TRIPLE = (
+    "org.apache.hadoop.hive.ql.io.parquet.MapredParquetInputFormat",
+    "org.apache.hadoop.hive.ql.io.parquet.MapredParquetOutputFormat",
+    "org.apache.hadoop.hive.ql.io.parquet.serde.ParquetHiveSerDe",
 )
 
-
-def _parse_props(raw: str) -> dict[str, str]:
-    """Parse a DESCRIBE 'Table Properties' value ``[k=v, k2=v2, ...]``.
-
-    Split only on commas that START a new ``key=`` pair, so property
-    VALUES containing commas (e.g. a column list) survive intact.
-    """
-    props: dict[str, str] = {}
-    for pair in re.split(r",\s*(?=[\w.\-]+=)", raw.strip("[]")):
-        if "=" in pair:
-            k, _, v = pair.partition("=")
-            props[k.strip()] = v.strip()
-    return props
+# InputFormat class-name fragments; the upper-cased fragment is the
+# diff-vocabulary format token.
+_INPUT_FORMATS = ("orc", "avro", "sequencefile", "text")
 
 
-def _table_format(spark: SparkSession, table: str) -> tuple[str, dict[str, str]]:
-    """(PARQUET|ICEBERG|ORC|AVRO|SEQUENCEFILE|TEXT, properties) from
-    DESCRIBE EXTENDED."""
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    provider = input_format = serde = ""
-    output_format = ""
-    props: dict[str, str] = {}
-    for r in rows:
-        key = (r["col_name"] or "").strip()
-        val = (r["data_type"] or "").strip()
-        if key == "Provider":
-            provider = val.lower()
-        elif key == "Table Properties":
-            props = _parse_props(val)
-        elif key == "InputFormat":
-            input_format = val
-        elif key == "OutputFormat":
-            output_format = val
-        elif key in ("Serde Library", "SerDe Library"):
-            serde = val
+def _describe(spark: SparkSession, table: str) -> dict[str, Any] | None:
+    """The table's ``DESCRIBE TABLE EXTENDED … AS JSON`` document, or
+    None when it does not exist. The existence check comes first: a
+    describe of a missing table logs a JVM stack trace even when the
+    error is caught, and new tables are a normal outcome."""
+    if not spark.catalog.tableExists(table):
+        return None
+    return json.loads(spark.sql(f"DESCRIBE TABLE EXTENDED {table} AS JSON").first()[0])
+
+
+def _type_string(t: dict[str, Any]) -> str:
+    """A JSON type node as the ``simpleString`` type text (what
+    ``listColumns`` prints, minus its wide-struct truncation);
+    collations are dropped."""
+    name = t["name"]
+    if name == "decimal":
+        return f"decimal({t['precision']},{t['scale']})"
+    if name in ("char", "varchar"):
+        return f"{name}({t['length']})"
+    if name == "array":
+        return f"array<{_type_string(t['element_type'])}>"
+    if name == "map":
+        return f"map<{_type_string(t['key_type'])},{_type_string(t['value_type'])}>"
+    if name == "struct":
+        fields = ",".join(f"{f['name']}:{_type_string(f['type'])}" for f in t["fields"])
+        return f"struct<{fields}>"
+    if name == "interval":
+        start, end = t["start_unit"], t["end_unit"]
+        return f"interval {start}" if start == end else f"interval {start} to {end}"
+    return "timestamp" if name == "timestamp_ltz" else name
+
+
+def _table_format(desc: dict[str, Any]) -> str:
+    """PARQUET|ICEBERG|ORC|AVRO|SEQUENCEFILE|TEXT from a describe."""
+    props = desc.get("table_properties", {})
+    provider = desc.get("provider", "").lower()
     # Glue Iceberg tables carry table_type=ICEBERG + metadata_location;
     # either marks the table (Spark's session catalog reserves/swallows
     # `table_type`, but metadata_location — an Iceberg-only property —
@@ -94,68 +105,58 @@ def _table_format(spark: SparkSession, table: str) -> tuple[str, dict[str, str]]
         or props.get("table_type", "").upper() == "ICEBERG"
         or "metadata_location" in props
     ):
-        fmt = "ICEBERG"
-    elif provider == "parquet":
-        fmt = "PARQUET"
-    elif provider == "hive":
-        if (input_format, output_format, serde) == (
-            _PARQUET_INPUT,
-            _PARQUET_OUTPUT,
-            _PARQUET_SERDE,
-        ):
-            fmt = "PARQUET"
-        else:
-            low = input_format.lower()
-            fmt = next((tok for frag, tok in _INPUT_FORMAT_TOKENS if frag in low), "TEXT")
-    else:
-        fmt = "TEXT"
-    return fmt, props
+        return "ICEBERG"
+    if provider == "parquet":
+        return "PARQUET"
+    if provider != "hive":
+        return "TEXT"
+    input_format = desc.get("input_format", "")
+    if (input_format, desc.get("output_format"), desc.get("serde_library")) == _PARQUET_TRIPLE:
+        return "PARQUET"
+    low = input_format.lower()
+    return next((frag.upper() for frag in _INPUT_FORMATS if frag in low), "TEXT")
 
 
-def snapshot_catalog(
-    spark: SparkSession, tables: list[str]
-) -> tuple[DataFrame, DataFrame]:
+def snapshot_catalog(spark: SparkSession, tables: list[str]) -> tuple[DataFrame, DataFrame]:
     """Snapshot live tables into the (cat_cols, cat_tables) fixture
     shape. ``tables`` are db-qualified names; missing tables are simply
     absent from the snapshot (the diff routes them as new).
 
-    The per-table catalog calls happen on the driver — same as the
-    reference's Glue round-trips — but the snapshot is taken ONCE and
-    the diff itself is a single distributed plan, so catalog latency
-    is O(tables) while diff cost is O(columns) distributed.
+    Each table is read once through :func:`_describe` on the driver —
+    same as the reference's Glue round-trips — but the snapshot is
+    taken ONCE and the diff itself is a single distributed plan, so
+    catalog latency is O(tables) while diff cost is O(columns)
+    distributed.
 
     ICEBERG tables that expose a ``metadata_location`` property get
     their columns (with REAL field ids), partition spec, and properties
     from the metadata.json — all locations are read in ONE Spark text
-    scan. Iceberg tables WITHOUT a metadata location fall back to
-    listColumns rows (field_id NULL); the apply path refuses partition
-    DDL for those (see cli.run_alterator).
+    scan. Iceberg tables WITHOUT a metadata location fall back to the
+    describe's columns (field_id NULL); the apply path refuses
+    partition DDL for those (see cli.run_alterator).
     """
     from .iceberg_metadata import read_metadata_files
 
     col_rows, tbl_rows = [], []
     ice_locations: dict[str, str] = {}
     for table in tables:
-        if not spark.catalog.tableExists(table):
+        desc = _describe(spark, table)
+        if desc is None:
             continue
-        fmt, props = _table_format(spark, table)
+        fmt, props = _table_format(desc), desc.get("table_properties", {})
         meta_loc = props.get("metadata_location")
         if fmt == "ICEBERG" and meta_loc:
             ice_locations[table] = meta_loc
         else:
-            cols = spark.catalog.listColumns(table)
-            data_pos = part_pos = 0
-            for c in cols:
-                if c.isPartition:
-                    col_rows.append((table, c.name.lower(), c.dataType.lower(), part_pos, True, None))
-                    part_pos += 1
-                else:
-                    col_rows.append((table, c.name.lower(), c.dataType.lower(), data_pos, False, None))
-                    data_pos += 1
-        tbl_rows.append(
-            (table, "EXTERNAL_TABLE", fmt, meta_loc, props, "0")
-        )
-    cols_df = spark.createDataFrame(col_rows, _COLS_SCHEMA)
+            parts = set(desc.get("partition_columns", []))
+            pos = {False: 0, True: 0}
+            for c in desc["columns"]:
+                is_part = c["name"] in parts
+                col_type = _type_string(c["type"]).lower()
+                col_rows.append((table, c["name"].lower(), col_type, pos[is_part], is_part, None))
+                pos[is_part] += 1
+        tbl_rows.append((table, "EXTERNAL_TABLE", fmt, meta_loc, props, "0"))
+    cols_df = spark.createDataFrame(col_rows, COLS_SCHEMA)
     if ice_locations:
         meta_cols, meta_props = read_metadata_files(spark, ice_locations)
         cols_df = cols_df.unionByName(meta_cols)
@@ -163,11 +164,9 @@ def snapshot_catalog(
         # diff (reference plucks them from the same file)
         tbl_rows = [
             (t, tt, fmt, loc, meta_props.get(t, props), ver)
-            if t in meta_props
-            else (t, tt, fmt, loc, props, ver)
             for (t, tt, fmt, loc, props, ver) in tbl_rows
         ]
-    return cols_df, spark.createDataFrame(tbl_rows, _TABLES_SCHEMA)
+    return cols_df, spark.createDataFrame(tbl_rows, TABLES_SCHEMA)
 
 
 # Injected boto3 Glue client (tests pass a moto client; production
@@ -178,9 +177,9 @@ GLUE_CLIENT = None
 
 def _glue_backed(spark: SparkSession) -> bool:
     """True when the session's metastore client factory is AWS Glue
-    (the get_spark(glue=True) wiring, session.py:62)."""
+    (the get_spark(glue=True) wiring, session.GLUE_CONFS)."""
     try:
-        factory = spark.conf.get("hive.metastore.client.factory.class", "") or ""
+        factory = spark.conf.get(GLUE_FACTORY_KEY, "") or ""
     except Exception:  # noqa: BLE001 — conf key may be restricted
         factory = ""
     return "glue" in factory.lower()
@@ -231,25 +230,22 @@ def table_version(spark: SparkSession, table: str) -> str | None:
 
     - Iceberg: the ``metadata_location`` property — a NEW metadata file
       per commit, so it IS the table version.
-    - otherwise: a digest of the schema + table properties, which
-      changes exactly when an ALTER lands.
+    - otherwise: a digest of the described columns, partition columns
+      and table properties, which changes exactly when an ALTER lands.
     """
-    import hashlib
-
     if GLUE_CLIENT is not None or _glue_backed(spark):
         v = glue_table_version(table)
         if v is not None:
             return v
-    if not spark.catalog.tableExists(table):
+    desc = _describe(spark, table)
+    if desc is None:
         return None
-    _, props = _table_format(spark, table)
+    props = desc.get("table_properties", {})
     if props.get("metadata_location"):
         return props["metadata_location"]
-    schema_sig = ",".join(
-        f"{c.name}:{c.dataType}:{int(c.isPartition)}"
-        for c in spark.catalog.listColumns(table)
+    sig = json.dumps(
+        [desc["columns"], desc.get("partition_columns", []), props], sort_keys=True
     )
-    sig = f"{schema_sig}|{sorted(props.items())}"
     return hashlib.md5(sig.encode()).hexdigest()[:12]
 
 

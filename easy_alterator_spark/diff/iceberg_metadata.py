@@ -18,10 +18,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-_COLS_SCHEMA = (
-    "table_name string, name string, type string, position int, "
-    "is_partition boolean, field_id int"
-)
+from .catalog import COLS_SCHEMA
 
 
 def parse_metadata(meta: dict[str, Any], table_name: str) -> tuple[list, dict]:
@@ -69,7 +66,7 @@ def read_metadata_files(
     per-table properties). Paths may be local, s3://, hdfs:// — any
     Hadoop-visible filesystem."""
     if not locations:
-        return spark.createDataFrame([], _COLS_SCHEMA), {}
+        return spark.createDataFrame([], COLS_SCHEMA), {}
     texts = (
         spark.read.text(list(locations.values()), wholetext=True)
         .selectExpr("input_file_name() as path", "value")
@@ -85,4 +82,4 @@ def read_metadata_files(
         t_rows, t_props = parse_metadata(json.loads(text), table)
         rows.extend(t_rows)
         props[table] = t_props
-    return spark.createDataFrame(rows, _COLS_SCHEMA), props
+    return spark.createDataFrame(rows, COLS_SCHEMA), props

@@ -13,7 +13,6 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ..ddl.render import hive_alter_statements
 from ..ddl.types import is_compatible, normalize_hive_type
@@ -37,20 +36,18 @@ def sync_tables(
     incompatible type changes without --force), mirroring the
     reference's raise-on-failure contract (process.py:69-88)."""
     cat_cols, cat_tables = snapshot_catalog(spark, [src, tgt])
-    present = {r["table_name"] for r in cat_tables.select("table_name").collect()}
+    present = {r["table_name"] for r in cat_tables.collect()}
     for t in (src, tgt):
         if t not in present:
             raise SyncError(f"table not found in catalog: {t}")
 
-    cols = {
-        t: [
+    # one collect of the snapshot, ordered on the driver: partition
+    # columns first, each kind by position
+    cols: dict[str, list[dict[str, Any]]] = {src: [], tgt: []}
+    for r in sorted(cat_cols.collect(), key=lambda r: (not r["is_partition"], r["position"])):
+        cols[r["table_name"]].append(
             {"Name": r["name"], "Type": r["type"], "is_partition": r["is_partition"]}
-            for r in cat_cols.filter(F.col("table_name") == t)
-            .orderBy(F.col("is_partition").cast("int").desc(), "position")
-            .collect()
-        ]
-        for t in (src, tgt)
-    }
+        )
 
     sp = [c for c in cols[src] if c["is_partition"]]
     tp = [c for c in cols[tgt] if c["is_partition"]]

@@ -80,18 +80,11 @@ _CAT_TABLES = [
 
 def _fixtures(spark):
     from ..ddl.parser import corpus_from_rows, parse_ddl_corpus
+    from ..diff.catalog import COLS_SCHEMA, TABLES_SCHEMA
 
     parsed = parse_ddl_corpus(corpus_from_rows(spark, _DDLS))
-    cat_cols = spark.createDataFrame(
-        _CAT_COLS,
-        "table_name string, name string, type string, position int, "
-        "is_partition boolean, field_id int",
-    )
-    cat_tables = spark.createDataFrame(
-        _CAT_TABLES,
-        "table_name string, table_type string, format string, "
-        "metadata_location string, properties map<string,string>, version_id string",
-    )
+    cat_cols = spark.createDataFrame(_CAT_COLS, COLS_SCHEMA)
+    cat_tables = spark.createDataFrame(_CAT_TABLES, TABLES_SCHEMA)
     return parsed, cat_cols, cat_tables
 
 
@@ -193,22 +186,11 @@ def _bulk_fixture(spark, n_tables: int = 500):
             cat_cols.append((t, c, ty, pos, False, None))
         cat_tables.append((t, "EXTERNAL_TABLE", "PARQUET", None, {}, "1"))
     from ..ddl.parser import corpus_from_rows, parse_ddl_corpus
+    from ..diff.catalog import COLS_SCHEMA, TABLES_SCHEMA
 
     parsed = parse_ddl_corpus(corpus_from_rows(spark, ddls)).cache()
-    cc = (
-        spark.createDataFrame(
-            cat_cols,
-            "table_name string, name string, type string, position int, "
-            "is_partition boolean, field_id int",
-        )
-        .repartition(8, "table_name")
-        .cache()
-    )
-    ct = spark.createDataFrame(
-        cat_tables,
-        "table_name string, table_type string, format string, "
-        "metadata_location string, properties map<string,string>, version_id string",
-    )
+    cc = spark.createDataFrame(cat_cols, COLS_SCHEMA).repartition(8, "table_name").cache()
+    ct = spark.createDataFrame(cat_tables, TABLES_SCHEMA)
     _BULK_CACHE[key] = (parsed, cc, ct)
     return parsed, cc, ct
 

@@ -47,6 +47,10 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# The Hive metastore client factory setting; diff/catalog.py reads it
+# back to tell a Glue-backed session.
+GLUE_FACTORY_KEY = "spark.hadoop.hive.metastore.client.factory.class"
+
 # The catalog swap that points the SAME engine at AWS Glue instead of
 # the local session catalog (SURVEY: reference does this via boto3;
 # here it's session config only — no code change in the diff/apply
@@ -58,7 +62,7 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
 # interactive sessions ship them preinstalled).
 GLUE_CONFS: dict[str, str] = {
     # Hive-metastore-compatible route (covers the PARQUET/Hive path)
-    "spark.hadoop.hive.metastore.client.factory.class": (
+    GLUE_FACTORY_KEY: (
         "com.amazonaws.glue.catalog.metastore.AWSGlueDataCatalogHiveClientFactory"
     ),
     # Iceberg GlueCatalog route (covers the ICEBERG path); the catalog

@@ -1,12 +1,16 @@
 """Live-catalog wiring tests for the run_alterator pipeline:
 
 - ICEBERG tables snapshot their columns/partition-spec/properties from
-  metadata.json (REAL field ids), not from listColumns — a NULL-field-id
-  snapshot makes every partition field look simultaneously new and
-  dropped and would apply spurious ADD/DROP PARTITION FIELD.
+  metadata.json (REAL field ids), not from the describe — a
+  NULL-field-id snapshot makes every partition field look
+  simultaneously new and dropped and would apply spurious ADD/DROP
+  PARTITION FIELD.
 - migration (still-Hive) tables are report-only during apply.
 - one failing table's ALTER must not abort the remaining tables.
 - hive-provider tables are only PARQUET when the SerDe triple says so.
+- every table is read with one existence check plus one JSON describe,
+  whose types and properties come back whole.
+- a Glue-backed session brackets with native Glue version ids.
 """
 
 from __future__ import annotations
@@ -167,18 +171,182 @@ class TestApplyGuards:
 
 class TestTableFormat:
     def test_non_parquet_provider_not_classified_parquet(self, spark, db):
-        from easy_alterator_spark.diff.catalog import _table_format
+        from easy_alterator_spark.diff.catalog import snapshot_catalog
 
         t = f"{db}.csv_t"
         spark.sql(f"CREATE TABLE {t} (id INT, v STRING) USING csv")
-        fmt, _ = _table_format(spark, t)
-        assert fmt != "PARQUET"
+        _, cat_tables = snapshot_catalog(spark, [t])
+        assert cat_tables.collect()[0]["format"] != "PARQUET"
 
-    def test_parse_props_quote_aware(self):
-        from easy_alterator_spark.diff.catalog import _parse_props
+    @pytest.mark.parametrize(
+        "desc, fmt",
+        [
+            ({"provider": "iceberg"}, "ICEBERG"),
+            ({"provider": "hive", "table_properties": {"table_type": "iceberg"}}, "ICEBERG"),
+            ({"provider": "parquet", "table_properties": {"metadata_location": "/m"}}, "ICEBERG"),
+            ({"provider": "PARQUET"}, "PARQUET"),
+            (
+                {
+                    "provider": "hive",
+                    "input_format": "org.apache.hadoop.hive.ql.io.parquet.MapredParquetInputFormat",
+                    "output_format": "org.apache.hadoop.hive.ql.io.parquet.MapredParquetOutputFormat",
+                    "serde_library": "org.apache.hadoop.hive.ql.io.parquet.serde.ParquetHiveSerDe",
+                },
+                "PARQUET",
+            ),
+            (
+                {
+                    "provider": "hive",
+                    "input_format": "org.apache.hadoop.hive.ql.io.parquet.MapredParquetInputFormat",
+                    "output_format": "org.apache.hadoop.hive.ql.io.parquet.MapredParquetOutputFormat",
+                    "serde_library": "org.apache.hadoop.hive.serde2.lazy.LazySimpleSerDe",
+                },
+                "TEXT",
+            ),
+            ({"provider": "hive", "input_format": "org.apache.hadoop.hive.ql.io.orc.OrcInputFormat"}, "ORC"),
+            ({"provider": "hive", "input_format": "org.apache.hadoop.mapred.SequenceFileInputFormat"}, "SEQUENCEFILE"),
+            ({"provider": "csv"}, "TEXT"),
+            ({}, "TEXT"),
+        ],
+    )
+    def test_format_rules(self, desc, fmt):
+        from easy_alterator_spark.diff.catalog import _table_format
 
-        raw = "[cols=a,b,c, table_type=ICEBERG, path=/x/y, write.merge.mode=merge-on-read]"
-        props = _parse_props(raw)
+        assert _table_format(desc) == fmt
+
+    def test_property_values_survive_snapshot(self, spark, db):
+        """Property values holding commas and ``=`` come back whole."""
+        from easy_alterator_spark.diff.catalog import snapshot_catalog
+
+        t = f"{db}.props_t"
+        spark.sql(
+            f"CREATE TABLE {t} (id INT) USING parquet TBLPROPERTIES ("
+            "'cols'='a,b,c', 'note'='a, b=c', 'write.merge.mode'='merge-on-read')"
+        )
+        _, cat_tables = snapshot_catalog(spark, [t])
+        props = cat_tables.collect()[0]["properties"]
         assert props["cols"] == "a,b,c"
-        assert props["table_type"] == "ICEBERG"
+        assert props["note"] == "a, b=c"
         assert props["write.merge.mode"] == "merge-on-read"
+        assert "b" not in props
+
+
+WIDE = ",".join(f"f{i}:int" for i in range(30))
+
+
+class TestColumnTypes:
+    def test_snapshot_types_match_spark_schema(self, spark, db):
+        """Differential: each snapshot type is the column's full
+        ``simpleString``, for every type the DDL grammar accepts."""
+        from easy_alterator_spark.diff.catalog import snapshot_catalog
+
+        t = f"{db}.all_types"
+        spark.sql(
+            f"""CREATE TABLE {t} (
+                ti TINYINT, si SMALLINT, i INT, bi BIGINT, fl FLOAT, db DOUBLE,
+                de DECIMAL(10,2), dw DECIMAL(38,0), s STRING, ch CHAR(5), vc VARCHAR(10),
+                bin BINARY, bo BOOLEAN, d DATE, ts TIMESTAMP, tn TIMESTAMP_NTZ,
+                ids INTERVAL DAY TO SECOND, iym INTERVAL YEAR TO MONTH, ih INTERVAL HOUR,
+                nest ARRAY<MAP<STRING, STRUCT<x: INT, `y z`: DECIMAL(5,1)>>>,
+                `sp ace` INT, w STRUCT<{WIDE}>, part STRING
+            ) USING parquet PARTITIONED BY (part)"""
+        )
+        cat_cols, _ = snapshot_catalog(spark, [t])
+        rows = cat_cols.orderBy("is_partition", "position").collect()
+        schema = spark.table(t).schema
+        assert [(r["name"], r["type"]) for r in rows] == [
+            (f.name, f.dataType.simpleString()) for f in schema
+        ]
+        assert [(r["position"], r["is_partition"]) for r in rows][-2:] == [(21, False), (0, True)]
+        assert dict((r["name"], r["type"]) for r in rows)["w"] == f"struct<{WIDE}>"
+
+    def test_char_varchar_types_when_preserved(self, spark, db):
+        from easy_alterator_spark.diff.catalog import snapshot_catalog
+
+        t = f"{db}.char_types"
+        spark.conf.set("spark.sql.preserveCharVarcharTypeInfo", "true")
+        try:
+            spark.sql(f"CREATE TABLE {t} (c CHAR(5), v VARCHAR(10), a ARRAY<VARCHAR(3)>) USING parquet")
+            cat_cols, _ = snapshot_catalog(spark, [t])
+            types = [r["type"] for r in cat_cols.orderBy("position").collect()]
+            assert types == [f.dataType.simpleString() for f in spark.table(t).schema]
+            assert types == ["char(5)", "varchar(10)", "array<varchar(3)>"]
+        finally:
+            spark.conf.unset("spark.sql.preserveCharVarcharTypeInfo")
+
+    def test_identical_wide_struct_ddl_is_identical(self, spark, db, tmp_path):
+        """A struct wider than Spark's 25-field print limit diffs on its
+        full type: the same DDL is identical, and a widened sibling
+        column is a compatible change."""
+        from easy_alterator_spark.cli import run_alterator
+
+        t = f"{db}.wide_t"
+        spark.sql(f"CREATE TABLE {t} (id INT, w STRUCT<{WIDE}>) USING parquet")
+        for id_type, outcome in (("int", "identical_tables"), ("bigint", "success_tables")):
+            (tmp_path / "wide_t.hql").write_text(
+                f"CREATE EXTERNAL TABLE `{t}`(`id` {id_type}, `w` struct<{WIDE}>) STORED AS PARQUET;"
+            )
+            report = run_alterator(spark, [str(tmp_path)], validate=True)
+            assert report["skipped_tables"] == []
+            assert [e if isinstance(e, str) else e["table_name"] for e in report[outcome]] == [t]
+
+
+class TestCatalogCalls:
+    def test_one_exists_and_one_describe_per_table(self, spark, db, monkeypatch):
+        """snapshot_catalog and table_version read an existing table with
+        one tableExists plus one DESCRIBE, a missing one with the
+        tableExists alone, and never call listColumns."""
+        from pyspark.sql import SparkSession
+        from pyspark.sql.catalog import Catalog
+
+        from easy_alterator_spark.diff import catalog as cat
+
+        a, b, missing = f"{db}.calls_a", f"{db}.calls_b", f"{db}.calls_missing"
+        spark.sql(f"CREATE TABLE {a} (id INT) USING parquet")
+        spark.sql(f"CREATE TABLE {b} (id INT, p STRING) USING parquet PARTITIONED BY (p)")
+        calls = {"tableExists": 0, "listColumns": 0, "DESCRIBE": 0}
+
+        def counted(cls, attr, key):
+            real = getattr(cls, attr)
+
+            def wrapper(self, *args, **kwargs):
+                if key(args):
+                    calls[key(args)] += 1
+                return real(self, *args, **kwargs)
+
+            monkeypatch.setattr(cls, attr, wrapper)
+
+        for attr in ("tableExists", "listColumns"):
+            counted(Catalog, attr, lambda args, attr=attr: attr)
+        counted(
+            SparkSession,
+            "sql",
+            lambda args: "DESCRIBE" if str(args[0]).lstrip().upper().startswith("DESCRIBE") else None,
+        )
+        monkeypatch.setattr(cat, "GLUE_CLIENT", None)
+
+        cat.snapshot_catalog(spark, [a, b, missing])
+        assert calls == {"tableExists": 3, "listColumns": 0, "DESCRIBE": 2}
+        assert cat.table_version(spark, a) is not None
+        assert cat.table_version(spark, missing) is None
+        assert calls == {"tableExists": 5, "listColumns": 0, "DESCRIBE": 3}
+
+
+class TestGlueBacked:
+    def test_glue_session_brackets_with_glue_version(self, spark, db, monkeypatch):
+        """get_spark(glue=True)'s factory setting routes table_version to
+        the native Glue VersionId."""
+        from easy_alterator_spark.diff import catalog as cat
+        from easy_alterator_spark.session import GLUE_CONFS
+
+        [key] = [k for k in GLUE_CONFS if k.endswith("metastore.client.factory.class")]
+        t = f"{db}.glue_t"
+        spark.sql(f"CREATE TABLE {t} (id INT) USING parquet")
+        monkeypatch.setattr(cat, "GLUE_CLIENT", None)
+        monkeypatch.setattr(cat, "glue_table_version", lambda table: f"v-{table}")
+        assert cat.table_version(spark, t) != f"v-{t}"
+        spark.conf.set(key, GLUE_CONFS[key])
+        try:
+            assert cat.table_version(spark, t) == f"v-{t}"
+        finally:
+            spark.conf.unset(key)

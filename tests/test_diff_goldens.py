@@ -28,18 +28,11 @@ import os
 
 import pytest
 
+from easy_alterator_spark.diff.catalog import COLS_SCHEMA, TABLES_SCHEMA
+
 from .test_schema_diff import CAT_COLS, CAT_TABLES, DDLS
 
 GOLDEN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "golden")
-
-COLS_SCHEMA = (
-    "table_name string, name string, type string, position int, "
-    "is_partition boolean, field_id int"
-)
-TABLES_SCHEMA = (
-    "table_name string, table_type string, format string, "
-    "metadata_location string, properties map<string,string>, version_id string"
-)
 
 # Behaviour the join form gave implicitly, one table per case.
 EDGE_DDLS = {

@@ -7,6 +7,8 @@ import json
 
 import pytest
 
+from easy_alterator_spark.diff.catalog import COLS_SCHEMA, TABLES_SCHEMA
+
 METADATA = {
     "format-version": 2,
     "current-schema-id": 1,
@@ -67,8 +69,7 @@ def test_read_via_spark_and_diff(spark, meta_file):
     assert cat_cols.count() == 5
     cat_tables = spark.createDataFrame(
         [("db.t", "EXTERNAL_TABLE", "ICEBERG", meta_file, props["db.t"], "1")],
-        "table_name string, table_type string, format string, "
-        "metadata_location string, properties map<string,string>, version_id string",
+        TABLES_SCHEMA,
     )
     # DDL renames col4 -> col5. NB the coherent timestamp pairing is
     # metadata `timestamp` (Iceberg ntz) <-> DDL `timestamp_ntz`: the

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import pytest
 
+from easy_alterator_spark.diff.catalog import COLS_SCHEMA, TABLES_SCHEMA
+
 sf = None  # tests here don't touch the relational test data
 
 DDLS = {
@@ -208,13 +210,11 @@ def report(spark):
     parsed = parse_ddl_corpus(corpus).cache()
     cat_cols = spark.createDataFrame(
         CAT_COLS,
-        "table_name string, name string, type string, position int, "
-        "is_partition boolean, field_id int",
+        COLS_SCHEMA,
     )
     cat_tables = spark.createDataFrame(
         CAT_TABLES,
-        "table_name string, table_type string, format string, "
-        "metadata_location string, properties map<string,string>, version_id string",
+        TABLES_SCHEMA,
     )
     outcomes = hive_diff(parsed, cat_cols, cat_tables)
     ice_tables = [
@@ -412,13 +412,11 @@ class TestForceMode:
         parsed = parse_ddl_corpus(corpus)
         cat_cols = spark.createDataFrame(
             [("fdb.t", "m", "bigint", 0, False, None), ("fdb.t", "k", "int", 1, False, None)],
-            "table_name string, name string, type string, position int, "
-            "is_partition boolean, field_id int",
+            COLS_SCHEMA,
         )
         cat_tables = spark.createDataFrame(
             [("fdb.t", "EXTERNAL_TABLE", "PARQUET", None, {}, "9")],
-            "table_name string, table_type string, format string, "
-            "metadata_location string, properties map<string,string>, version_id string",
+            TABLES_SCHEMA,
         )
         # without force: skipped as incompatible
         plain = build_report(hive_diff(parsed, cat_cols, cat_tables))
@@ -449,13 +447,11 @@ class TestDuplicateFiles:
         parsed = parse_ddl_corpus(corpus)
         cat_cols = spark.createDataFrame(
             [("ddb.t", "x", "string", 0, False, 1)],
-            "table_name string, name string, type string, position int, "
-            "is_partition boolean, field_id int",
+            COLS_SCHEMA,
         )
         cat_tables = spark.createDataFrame(
             [("ddb.t", "EXTERNAL_TABLE", "ICEBERG", "s3://m", {}, "1")],
-            "table_name string, table_type string, format string, "
-            "metadata_location string, properties map<string,string>, version_id string",
+            TABLES_SCHEMA,
         )
         rows = iceberg_diff(parsed, cat_cols, cat_tables).collect()
         assert len(rows) == 1
@@ -469,15 +465,6 @@ class TestNestedTypes:
     Closes the reference's silent nested-type gap (SURVEY.md §1.3;
     reference src/bin/alterator.py:75-78 drops such columns from the
     parse entirely, so they'd be reported as deleted)."""
-
-    CAT_SCHEMA = (
-        "table_name string, name string, type string, position int, "
-        "is_partition boolean, field_id int"
-    )
-    TBL_SCHEMA = (
-        "table_name string, table_type string, format string, "
-        "metadata_location string, properties map<string,string>, version_id string"
-    )
 
     @pytest.fixture(scope="class")
     def nested_report(self, spark):
@@ -509,11 +496,11 @@ class TestNestedTypes:
                 ("ndb.nested", "meta", "struct<a:decimal(10,2)>", 3, False, None),
                 ("ndb.nested", "old_nested", "array<int>", 4, False, None),
             ],
-            self.CAT_SCHEMA,
+            COLS_SCHEMA,
         )
         cat_tables = spark.createDataFrame(
             [("ndb.nested", "EXTERNAL_TABLE", "PARQUET", None, {}, "4")],
-            self.TBL_SCHEMA,
+            TABLES_SCHEMA,
         )
         return build_report(hive_diff(parsed, cat_cols, cat_tables))
 
@@ -559,11 +546,11 @@ class TestNestedTypes:
         parsed = parse_ddl_corpus(corpus)
         cat_cols = spark.createDataFrame(
             [("ndb.same", "ev", "array<struct<k:string,v:int>>", 0, False, None)],
-            self.CAT_SCHEMA,
+            COLS_SCHEMA,
         )
         cat_tables = spark.createDataFrame(
             [("ndb.same", "EXTERNAL_TABLE", "PARQUET", None, {}, "1")],
-            self.TBL_SCHEMA,
+            TABLES_SCHEMA,
         )
         rep = build_report(hive_diff(parsed, cat_cols, cat_tables))
         assert [t for t in rep["identical_tables"]] == ["ndb.same"]
@@ -585,11 +572,11 @@ class TestNestedTypes:
         parsed = parse_ddl_corpus(corpus)
         cat_cols = spark.createDataFrame(
             [("ndb.ni", "ev", "array<struct<k:string,v:int>>", 0, False, 1)],
-            self.CAT_SCHEMA,
+            COLS_SCHEMA,
         )
         cat_tables = spark.createDataFrame(
             [("ndb.ni", "EXTERNAL_TABLE", "ICEBERG", "s3://m", {}, "1")],
-            self.TBL_SCHEMA,
+            TABLES_SCHEMA,
         )
         [row] = iceberg_diff(parsed, cat_cols, cat_tables).collect()
         # ev identical after canonicalization; tags is the only add, its
@@ -617,15 +604,6 @@ class TestIcebergPartitionTransforms:
     `days(ts)` diffed as an identity field named ts and produced a
     false rename against the catalog's ts_day."""
 
-    CAT_SCHEMA = (
-        "table_name string, name string, type string, position int, "
-        "is_partition boolean, field_id int"
-    )
-    TBL_SCHEMA = (
-        "table_name string, table_type string, format string, "
-        "metadata_location string, properties map<string,string>, version_id string"
-    )
-
     def _diff(self, spark, part_clause, cat_parts):
         from easy_alterator_spark.ddl.parser import corpus_from_rows, parse_ddl_corpus
         from easy_alterator_spark.diff import iceberg_diff
@@ -646,11 +624,11 @@ class TestIcebergPartitionTransforms:
                 ("tdb.tr", "region", "string", 2, False, 3),
             ]
             + cat_parts,
-            self.CAT_SCHEMA,
+            COLS_SCHEMA,
         )
         cat_tables = spark.createDataFrame(
             [("tdb.tr", "EXTERNAL_TABLE", "ICEBERG", "s3://m", {}, "1")],
-            self.TBL_SCHEMA,
+            TABLES_SCHEMA,
         )
         [row] = iceberg_diff(parsed, cat_cols, cat_tables).collect()
         return row
@@ -772,11 +750,11 @@ class TestIcebergPartitionTransforms:
                 ("tdb.nw", "b", "struct<x:decimal(10,2)>", 1, False, 2),
                 ("tdb.nw", "c", "map<string,array<int>>", 2, False, 3),
             ],
-            self.CAT_SCHEMA,
+            COLS_SCHEMA,
         )
         cat_tables = spark.createDataFrame(
             [("tdb.nw", "EXTERNAL_TABLE", "ICEBERG", "s3://m", {}, "1")],
-            self.TBL_SCHEMA,
+            TABLES_SCHEMA,
         )
         [row] = iceberg_diff(parsed, cat_cols, cat_tables).collect()
         entry = _row_to_iceberg_entry(row)
