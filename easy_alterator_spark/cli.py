@@ -4,7 +4,9 @@
 
 Pipeline: discover DDL files (driver) -> read + parse the whole corpus
 (one Spark plan) -> snapshot the catalog for the referenced tables ->
-corpus-wide diff -> report; apply rendered ALTERs unless --validate.
+Hive and Iceberg diffs, each routing its own files of the corpus ->
+report (one collect per diff, Iceberg column moves ordered on the
+driver); apply rendered ALTERs unless --validate.
 """
 
 from __future__ import annotations
@@ -69,9 +71,8 @@ def run_alterator(
     parsed = parse_ddl_corpus(
         read_ddl_corpus(spark, files, aws_account_id=aws_account_id)
     ).cache()
-    outcomes = None
-    # both frames are cached for the run only: a long-lived session
-    # must not carry one run's parse or diff into the next
+    # cached for the run only: a long-lived session must not carry one
+    # run's parse into the next
     try:
         tables = [
             r["table_name"]
@@ -79,16 +80,8 @@ def run_alterator(
             if r["table_name"]
         ]
         cat_cols, cat_tables = snapshot_catalog(spark, tables)
-        outcomes = hive_diff(parsed, cat_cols, cat_tables, force=force).cache()
-        ice_tables = [
-            r["table_name"]
-            for r in outcomes.filter("outcome = 'iceberg'").select("table_name").collect()
-        ]
-        ice = None
-        if ice_tables:
-            ice = iceberg_diff(
-                parsed.filter(parsed.table_name.isin(ice_tables)), cat_cols, cat_tables
-            )
+        outcomes = hive_diff(parsed, cat_cols, cat_tables, force=force)
+        ice = iceberg_diff(parsed, cat_cols, cat_tables)
         report = build_report(outcomes, ice, validate=validate, force=force)
         # S6 version bracket: record each to-be-altered table's catalog
         # version BEFORE apply (reference brackets Glue update_table with
@@ -176,8 +169,6 @@ def run_alterator(
         return report
     finally:
         parsed.unpersist(blocking=False)
-        if outcomes is not None:
-            outcomes.unpersist(blocking=False)
 
 
 def write_report(spark: SparkSession, report: dict, uri: str) -> None:

@@ -8,12 +8,12 @@ cascade closure in topological order, so emitting
 always references columns that are already in place.
 
 Deliberately driver-side: per-table graphs are tens of nodes
-(SURVEY.md §4.2). The distributed layer hands each table's directive
-list to :func:`plan_moves` through a Python UDF on that table's diff
-row. Semantics match the reference's cascade
-engine (column_position_manager.py:15-129), including its quirk that
-cycles among ``after`` directives are silently dropped by the
-Kahn-style sort (FIXTURES.md B6 pins this).
+(SURVEY.md §4.2): the report orders each collected ``iceberg_diff``
+row's ``position_candidates`` with :func:`plan_moves`, siblings in
+directive (DDL) order whatever the ``PYTHONHASHSEED``. Semantics match
+the reference's cascade engine (column_position_manager.py:15-129),
+including its quirk that cycles among ``after`` directives are silently
+dropped by the Kahn-style sort (FIXTURES.md B6 pins this).
 """
 
 from __future__ import annotations
@@ -67,7 +67,7 @@ def plan_moves(
         # after-edges (a column moves only after its anchor moved).
         indeg = {col: 0 for col in affected}
         out_edges: dict[str, list[str]] = defaultdict(list)
-        for col in affected:
+        for col in (c for c in current_after if c in affected):
             anchor = current_after.get(col)
             if anchor and anchor in affected:
                 out_edges[anchor].append(col)

@@ -21,12 +21,17 @@ row-local higher-order expression:
                                   -> new / dropped / replaced
 - A5 property set algebra      -> ``map_*`` functions on the props maps
 - O2 migration sequence gate   -> (name, type) arrays in source order
-- O3/O4 position cascade       -> the catalog successor of each ``after``
-                                  target by array index, then the
-                                  per-table topological sort
-                                  (:func:`easy_alterator_spark.ddl.position.plan_moves`)
-                                  as an Arrow-batched pandas UDF on the
-                                  row: the one Python step of the diff
+- O3/O4 position cascade       -> ``position_candidates``: each
+                                  ``after`` directive, valid when the
+                                  column is not already the catalog
+                                  successor of its target (by array
+                                  index); the report sorts them into
+                                  moves on the driver
+                                  (:func:`easy_alterator_spark.diff.report.position_moves`)
+
+The diff routes its own input: it reads only Iceberg CREATE files with
+a parsed table name (the files ``hive_diff`` can route to ``iceberg``),
+so callers pass the whole parsed corpus.
 
 Documented divergences from the reference (bit-rot fixed, see
 SURVEY.md §0/§7):
@@ -45,34 +50,12 @@ SURVEY.md §0/§7):
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..ddl import types as TY
-from ..ddl.position import plan_moves
 from .hive import outer_pairs, side, sorted_by, with_catalog
-
-
-_MOVES_T = T.ArrayType(
-    T.StructType([T.StructField(f, T.StringType()) for f in ("name", "after", "reason")])
-)
-
-
-@F.pandas_udf(_MOVES_T)
-def _plan_moves_udf(cands: pd.Series) -> pd.Series:
-    """Each table's cascade closure + topological order of its moves, or
-    NULL when there are none (tens of columns per table)."""
-
-    def moves(cs):
-        directives = {c["name"]: c["after"] for c in cs}
-        changes = {c["name"]: c["after"] for c in cs if c["valid"]}
-        return plan_moves(directives, changes) or None
-
-    return pd.Series([moves(cs) if len(cs) else None for cs in cands])
 
 
 _COMMON_FIELDS = ("pos", "name", "type", "is_deleted", "after", "backfilled_from", "is_first")
@@ -97,19 +80,21 @@ def iceberg_diff(
     cat_tables: DataFrame,
     catalog_name: str = "glue_catalog",
 ) -> DataFrame:
-    """Diff iceberg-routed DDL files against the catalog snapshot.
+    """Diff the Iceberg CREATE files of ``parsed`` against the catalog.
 
     Returns one row per table with nested diff columns:
     (table_name, full_name, requires_migration, sequence_mismatch,
     error, new_cols, dropped, renamed, compatible, incompatible,
-    position_changes, first_col, part_new, part_dropped, part_replaced,
-    props_new, props_removed, props_updated)
+    position_candidates, first_col, part_new, part_dropped,
+    part_replaced, props_new, props_removed, props_updated)
     """
-    # the iceberg diff is keyed by table; if two corpus files name the
-    # same table, keep the lexically-last file deterministically (the
-    # hive path is file-keyed and reports both)
+    # the iceberg diff is keyed by table; if two Iceberg CREATE files
+    # name the same table, keep the lexically-last file deterministically
+    # (the hive path is file-keyed and reports both)
     w = Window.partitionBy("table_name").orderBy(F.col("file_path").desc())
-    routed = parsed.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
+    routed = parsed.filter(
+        F.col("table_name").isNotNull() & F.col("is_create") & (F.col("hql_format") == "iceberg")
+    ).withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
     tables = cat_tables.select(
         "table_name",
         (F.col("format") != "ICEBERG").alias("requires_migration"),
@@ -400,7 +385,7 @@ def iceberg_diff(
                 ),
             )
         ).alias("incompatible"),
-        _plan_moves_udf("cands").alias("position_changes"),
+        _nonempty(F.col("cands")).alias("position_candidates"),
         "first_col",
         "part_new",
         "part_dropped",

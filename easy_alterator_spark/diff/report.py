@@ -1,10 +1,12 @@
 """Run-report assembly (A1): outcome rows -> the reference's JSON shape.
 
 The heavy lifting (routing, joins, classification) happens in Spark;
-this module collects the per-table outcome rows — tiny by construction,
-one row per DDL file — and shapes the nested report exactly like the
-reference's ``get_results`` (alterator.py:741-796) and the Iceberg
-handler's cleaned nested dict (iceberg_schema_handler.py:578-700).
+this module collects the outcome rows — tiny by construction, one row
+per DDL file or Iceberg table — and shapes the nested report exactly
+like the reference's ``get_results`` (alterator.py:741-796) and the
+Iceberg handler's cleaned nested dict (iceberg_schema_handler.py:578-700).
+It orders each Iceberg table's column moves on the driver
+(:func:`position_moves`), as the reference does.
 """
 
 from __future__ import annotations
@@ -12,6 +14,8 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import DataFrame
+
+from ..ddl.position import plan_moves
 
 
 def clean(result):
@@ -27,6 +31,17 @@ def clean(result):
     if isinstance(result, list):
         return [clean(x) for x in result]
     return result
+
+
+def position_moves(cands) -> list[dict[str, str | None]]:
+    """The ordered moves of one ``iceberg_diff`` row's
+    ``position_candidates``: every candidate's ``after`` is a directive,
+    the valid ones are the changes."""
+    cands = cands or []
+    return plan_moves(
+        {c["name"]: c["after"] for c in cands},
+        {c["name"]: c["after"] for c in cands if c["valid"]},
+    )
 
 
 def _row_to_iceberg_entry(r) -> dict[str, Any]:
@@ -50,10 +65,7 @@ def _row_to_iceberg_entry(r) -> dict[str, Any]:
             }
             for c in (r["incompatible"] or [])
         ],
-        "position_changes": [
-            {"name": m["name"], "after": m["after"], "reason": m["reason"]}
-            for m in (r["position_changes"] or [])
-        ],
+        "position_changes": position_moves(r["position_candidates"]),
     }
     if r["first_col"]:
         updated["position_changes"] = updated["position_changes"] + [
@@ -119,8 +131,8 @@ def build_report(
     Args:
         hive_outcomes: output of :func:`easy_alterator_spark.diff.hive.hive_diff`.
         iceberg_results: output of
-            :func:`easy_alterator_spark.diff.iceberg.iceberg_diff` for
-            the iceberg-routed tables (may be None if none).
+            :func:`easy_alterator_spark.diff.iceberg.iceberg_diff` on the
+            same parsed corpus (None: no Iceberg path).
         versions: table_name -> catalog version id (for the success
             version bracket; validate mode reports prev == current).
     """

@@ -109,22 +109,17 @@ def ddl_hive_diff(spark, sf_dir):
 @query("ddl_iceberg_diff", bench=False)  # fixture-driven; rows-only check
 def ddl_iceberg_diff(spark, sf_dir):
     """Iceberg rename/drop/new/position diff -> one flat row per table."""
-    from ..diff import hive_diff, iceberg_diff
+    from ..diff import iceberg_diff
 
     parsed, cat_cols, cat_tables = _fixtures(spark)
-    routed = hive_diff(parsed, cat_cols, cat_tables).filter("outcome = 'iceberg'")
-    ice = iceberg_diff(
-        parsed.join(routed.select("table_name"), "table_name", "left_semi"),
-        cat_cols,
-        cat_tables,
-    )
+    ice = iceberg_diff(parsed, cat_cols, cat_tables)
     return ice.select(
         "table_name",
         "requires_migration",
         F.to_json("new_cols").alias("new_json"),
         F.to_json("dropped").alias("dropped_json"),
         F.to_json("renamed").alias("renamed_json"),
-        F.to_json("position_changes").alias("moves_json"),
+        F.to_json("position_candidates").alias("candidates_json"),
         F.to_json("props_new").alias("props_json"),
     ).orderBy("table_name")
 

@@ -11,6 +11,8 @@
 - every table is read with one existence check plus one JSON describe,
   whose types and properties come back whole.
 - a Glue-backed session brackets with native Glue version ids.
+- a validate run over a small mixed corpus launches a fixed number of
+  Spark jobs.
 """
 
 from __future__ import annotations
@@ -350,3 +352,46 @@ class TestGlueBacked:
             assert cat.table_version(spark, t) == f"v-{t}"
         finally:
             spark.conf.unset(key)
+
+
+class TestRunJobs:
+    def test_validate_run_job_count(self, spark, db, ice_table, tmp_path):
+        """run_alterator(validate=True) over a Hive add, an Iceberg column
+        move and a new table: the parsed-table collect plus one collect per
+        diff, counted through a job group, which host load cannot move."""
+        from easy_alterator_spark.cli import run_alterator
+
+        t = f"{db}.jobs_hive"
+        spark.sql(f"CREATE TABLE {t} (id INT) USING parquet")
+        (tmp_path / "hive.hql").write_text(
+            f"CREATE EXTERNAL TABLE `{t}`(`id` int, `n1` string) STORED AS PARQUET;"
+        )
+        (tmp_path / "ice.hql").write_text(
+            f"""CREATE TABLE `{ice_table}` (
+                `col1` string,
+                `day_rk` date, -- after: col1
+                `amount` bigint,
+            ) USING iceberg
+            PARTITIONED BY (`day_rk`)
+            TBLPROPERTIES('write.merge.mode'='merge-on-read');"""
+        )
+        (tmp_path / "new.hql").write_text(
+            f"CREATE EXTERNAL TABLE `{db}.jobs_new`(`id` int) STORED AS PARQUET;"
+        )
+        sc = spark.sparkContext
+        group = "test-run-alterator-jobs"
+        sc.setJobGroup(group, "run_alterator(validate=True)")
+        try:
+            report = run_alterator(spark, [str(tmp_path)], validate=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+
+        assert [e["table_name"] for e in report["success_tables"]] == [t]
+        assert report["new_tables"] == [f"{db}.jobs_new"]
+        [e] = report["iceberg_tables"]
+        assert e["columns"]["updated"]["position_changes"] == [
+            {"name": "day_rk", "after": "col1", "reason": "direct"}
+        ]
+        assert len(jobs) == 13

@@ -2,7 +2,9 @@
 
 ``tests/golden/*.json`` hold the exact outputs of ``hive_diff``,
 ``iceberg_diff`` and ``build_report`` on four corpora, captured from the
-earlier join-per-merge form of the engine:
+earlier join-per-merge form of the engine (the move column of the Iceberg
+schema and of ``ddl_iceberg_diff``, and the Iceberg rows of tables absent
+from the catalog, come from the self-routing form that followed it):
 
 - ``bulk500``: the 500-table ``_bulk_fixture`` behind ``ddl_diff_bulk``;
 - ``schema_diff``: the ``tests/test_schema_diff.py`` corpus, with
@@ -111,7 +113,15 @@ EDGE_CAT_TABLES = [
 
 
 def _rows(df, key: str) -> list:
+    """Every row of ``df``, with an Iceberg row's ``position_candidates``
+    held as the ordered moves the report makes of them (under the key
+    ``position_changes``, NULL when there are none)."""
+    from easy_alterator_spark.diff.report import position_moves
+
     rows = [r.asDict(recursive=True) for r in df.collect()]
+    for r in rows:
+        if "position_candidates" in r:
+            r["position_changes"] = position_moves(r.pop("position_candidates")) or None
     return sorted(rows, key=lambda r: (r[key] is not None, r[key] or ""))
 
 
@@ -139,23 +149,17 @@ def _frames(spark, ddls: dict, cat_cols: list, cat_tables: list, account: str = 
 
 
 def _diff_case(parsed, cat_cols, cat_tables, force: bool, versions=None) -> dict:
-    """Both diffs plus the report, wired as ``cli.run_alterator`` wires
-    them; ``iceberg_all`` also diffs every file on the Iceberg path."""
+    """Both diffs over the whole parsed corpus plus the report, wired as
+    ``cli.run_alterator`` wires them."""
     from easy_alterator_spark.diff import build_report, hive_diff, iceberg_diff
 
     outcomes = hive_diff(parsed, cat_cols, cat_tables, force=force)
-    ice_tables = [
-        r["table_name"]
-        for r in outcomes.filter("outcome = 'iceberg'").select("table_name").collect()
-    ]
-    ice = iceberg_diff(parsed.filter(parsed.table_name.isin(ice_tables)), cat_cols, cat_tables)
-    ice_all = iceberg_diff(parsed, cat_cols, cat_tables)
+    ice = iceberg_diff(parsed, cat_cols, cat_tables)
     return {
         "hive_schema": outcomes.schema.simpleString(),
         "iceberg_schema": ice.schema.simpleString(),
         "hive": _rows(outcomes, "file_path"),
         "iceberg": _rows(ice, "table_name"),
-        "iceberg_all": _rows(ice_all, "table_name"),
         "report": _report(build_report(outcomes, ice, versions=versions, force=force)),
     }
 

@@ -123,20 +123,26 @@ class TestSchemaDiffPlanShape:
         from .test_schema_diff import CAT_COLS, CAT_TABLES, DDLS
 
         parsed, cat_cols, cat_tables = _frames(spark, DDLS, CAT_COLS, CAT_TABLES)
-        outcomes = hive_diff(parsed, cat_cols, cat_tables)
-        ice_tables = [
-            r["table_name"]
-            for r in outcomes.filter("outcome = 'iceberg'").select("table_name").collect()
-        ]
-        ice = iceberg_diff(
-            parsed.filter(parsed.table_name.isin(ice_tables)), cat_cols, cat_tables
-        )
-        return {"hive_diff": outcomes, "iceberg_diff": ice}
+        return {
+            "hive_diff": hive_diff(parsed, cat_cols, cat_tables),
+            "iceberg_diff": iceberg_diff(parsed, cat_cols, cat_tables),
+        }
 
     @pytest.mark.parametrize("name", ["hive_diff", "iceberg_diff"])
     def test_diff_is_a_few_exchanges(self, diffs, name):
         n = self._exchanges(diffs[name])
         assert n["shuffle"] + n["broadcast"] <= self.MAX_EXCHANGES, (name, n)
+
+    @pytest.mark.parametrize("name", ["hive_diff", "iceberg_diff"])
+    def test_diff_starts_no_python_worker(self, diffs, name):
+        """Column moves are ordered on the driver after the collect
+        (``report.position_moves``): the executed diff plans hold no
+        Python evaluation node, so a CLI run launches no Python worker."""
+        from easy_alterator_spark.plans.audit import executed_plan
+
+        plan = executed_plan(diffs[name])
+        for node in ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas"):
+            assert node not in plan, (name, node)
 
 
 class TestTrainingDataOps:

@@ -3,6 +3,11 @@ cascade engine (SURVEY.md §5.3)."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -161,6 +166,29 @@ class TestPlanMoves:
         directives = {"c": "a", "z": "y"}
         moves = plan_moves(directives, {"c": "a"})
         assert [m["name"] for m in moves] == ["c"]
+
+    def test_sibling_order_ignores_hash_seed(self):
+        """Columns declared after the same anchor move in directive (DDL)
+        order, so the report's moves do not depend on the driver's
+        ``PYTHONHASHSEED``."""
+        code = (
+            "from easy_alterator_spark.ddl.position import plan_moves\n"
+            "d = {'x': 'w', 'b': 'x', 'c': 'x', 'e': 'x', 'f': 'b', 'g': 'c'}\n"
+            "print(','.join(m['name'] for m in plan_moves(d, {'x': 'w'})))"
+        )
+        root = Path(__file__).resolve().parent.parent
+        orders = {
+            subprocess.run(
+                [sys.executable, "-c", code],
+                env={**os.environ, "PYTHONHASHSEED": str(seed)},
+                cwd=root,
+                capture_output=True,
+                text=True,
+                check=True,
+            ).stdout.strip()
+            for seed in range(6)
+        }
+        assert orders == {"x,b,c,e,f,g"}
 
     @given(
         st.dictionaries(

@@ -216,16 +216,12 @@ def report(spark):
         CAT_TABLES,
         TABLES_SCHEMA,
     )
-    outcomes = hive_diff(parsed, cat_cols, cat_tables)
-    ice_tables = [
-        r["table_name"]
-        for r in outcomes.filter("outcome = 'iceberg'").select("table_name").collect()
-    ]
-    ice = iceberg_diff(
-        parsed.filter(parsed.table_name.isin(ice_tables)), cat_cols, cat_tables
-    )
     versions = {t: v for (t, _tt, _f, _m, _p, v) in CAT_TABLES}
-    return build_report(outcomes, ice, versions=versions)
+    return build_report(
+        hive_diff(parsed, cat_cols, cat_tables),
+        iceberg_diff(parsed, cat_cols, cat_tables),
+        versions=versions,
+    )
 
 
 def by_table(entries, name, key="table_name"):
@@ -457,6 +453,41 @@ class TestDuplicateFiles:
         assert len(rows) == 1
         # lexically-last file wins; no cross-file contamination
         assert [c["name"] for c in rows[0]["new_cols"]] == ["fresh"]
+
+    def test_hive_file_for_an_iceberg_table_stays_off_the_iceberg_path(self, spark):
+        """An Iceberg and a Hive CREATE file name one Iceberg table. Only
+        the Iceberg file is diffed on the Iceberg path, even though the
+        Hive file sorts last: its result is identical, with no missing
+        backfill error and no column taken from the Hive DDL."""
+        from easy_alterator_spark.ddl.parser import corpus_from_rows, parse_ddl_corpus
+        from easy_alterator_spark.diff import build_report, hive_diff, iceberg_diff
+
+        parsed = parse_ddl_corpus(
+            corpus_from_rows(
+                spark,
+                [
+                    ("hql/a.hql", "CREATE TABLE `db.t` (`id` bigint, `x` string) USING iceberg;"),
+                    ("hql/b.hql", "CREATE TABLE `db.t` (`id` int, `zzz` double) STORED AS PARQUET;"),
+                ],
+            )
+        )
+        cat_cols = spark.createDataFrame(
+            [("db.t", "id", "long", 0, False, 1), ("db.t", "x", "string", 1, False, 2)],
+            COLS_SCHEMA,
+        )
+        cat_tables = spark.createDataFrame(
+            [("db.t", "EXTERNAL_TABLE", "ICEBERG", "s3://m", {}, "1")], TABLES_SCHEMA
+        )
+        ice = iceberg_diff(parsed, cat_cols, cat_tables)
+        [row] = ice.collect()
+        assert (row["error"], row["new_cols"], row["dropped"], row["incompatible"]) == (
+            None, None, None, None,
+        )
+        report = build_report(hive_diff(parsed, cat_cols, cat_tables), ice)
+        assert report["identical_tables"] == ["db.t"]
+        assert report["iceberg_tables"] == []
+        # the Hive file alone: a managed CREATE is errored on the Hive path
+        assert report["errored_tables"] == ["db.t"]
 
 
 class TestNestedTypes:
