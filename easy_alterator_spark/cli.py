@@ -4,9 +4,10 @@
 
 Pipeline: discover DDL files (driver) -> read + parse the whole corpus
 (one Spark plan) -> snapshot the catalog for the referenced tables ->
-Hive and Iceberg diffs, each routing its own files of the corpus ->
-report (one collect per diff, Iceberg column moves ordered on the
-driver); apply rendered ALTERs unless --validate.
+one diff plan, each file routed and diffed in its row, each Iceberg
+table's diff carried on one of its files -> report (one collect,
+Iceberg column moves ordered on the driver); apply rendered ALTERs
+unless --validate.
 """
 
 from __future__ import annotations
@@ -59,7 +60,7 @@ def run_alterator(
     from .aws import resolve_aws_account_id
     from .ddl.parser import parse_ddl_corpus, read_ddl_corpus
     from .ddl.render import hive_alter_statements, iceberg_alter_statements
-    from .diff import build_report, hive_diff, iceberg_diff
+    from .diff import build_report, hive_diff
     from .diff.catalog import apply_statements, snapshot_catalog, table_version
     from .files import filter_ddl_files
 
@@ -81,8 +82,7 @@ def run_alterator(
         ]
         cat_cols, cat_tables = snapshot_catalog(spark, tables)
         outcomes = hive_diff(parsed, cat_cols, cat_tables, force=force)
-        ice = iceberg_diff(parsed, cat_cols, cat_tables)
-        report = build_report(outcomes, ice, validate=validate, force=force)
+        report = build_report(outcomes, validate=validate, force=force)
         # S6 version bracket: record each to-be-altered table's catalog
         # version BEFORE apply (reference brackets Glue update_table with
         # two get_table_versions calls, alterator.py:434-440). Validate

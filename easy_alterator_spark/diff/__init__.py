@@ -12,6 +12,11 @@ or 458k tables is the same few-stage plan. :mod:`.hive` and
 snapshots are plain DataFrames (FIXTURES.md B2/B3), fed either from
 test fixtures or from the live Spark catalog
 (:mod:`easy_alterator_spark.diff.catalog`).
+
+Both paths are one plan: :func:`hive_diff` routes every file and
+carries each Iceberg table's diff as its ``iceberg`` column, so
+:func:`build_report` shapes the whole report from one collect.
+:func:`iceberg_diff` is that column alone, one row per table.
 """
 
 from .hive import hive_diff  # noqa: F401

@@ -41,6 +41,7 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..ddl import types as TY
 
@@ -218,22 +219,39 @@ def hive_diff(
 
     Returns one row per DDL file:
     (file_path, table_name, outcome, reason, add, delete, compatible,
-    incompatible, format_change, requires_migration)
+    incompatible, format_change, requires_migration, iceberg)
     where outcome ∈ skipped|errored|new|identical|success|non_parquet|
     format_changed|iceberg. ``format_change`` may be set alongside
     outcome='iceberg' (migration tables land in both report lists,
-    alterator.py:556-570).
+    alterator.py:556-570). ``iceberg`` is the table's Iceberg diff
+    (:func:`.iceberg.with_iceberg`) on the one file that carries it,
+    the lexically last Iceberg CREATE file naming the table, and NULL
+    on every other row; so this one plan, collected once, holds the
+    whole report.
 
     The diff is keyed by file, not table: two DDL files naming the same
     table (e.g. a stray non-CREATE statement) each get their own row and
     cannot contaminate each other's lists.
     """
+    from .iceberg import with_iceberg  # built on this module's helpers
+
     cat_t = cat_tables.select(
         "table_name",
         F.col("format").alias("cat_format"),
         F.lit(True).alias("cat_exists"),
+        F.col("properties").alias("cat_props"),
     )
-    base = with_catalog(parsed.join(F.broadcast(cat_t), "table_name", "left"), cat_cols)
+    # the Iceberg route: a named Iceberg CREATE file
+    routed = F.col("table_name").isNotNull() & F.col("is_create") & (F.col("hql_format") == "iceberg")
+    # the Iceberg diff is keyed by table: of several routed files naming
+    # one table, the lexically last carries it (the Hive path is
+    # file-keyed and reports each)
+    last = F.max(F.when(routed, F.col("file_path"))).over(Window.partitionBy("table_name"))
+    keyed = parsed.withColumn("ice_last", last)
+    base = with_iceberg(
+        with_catalog(keyed.join(F.broadcast(cat_t), "table_name", "left"), cat_cols),
+        routed & (F.col("file_path") == F.col("ice_last")),
+    )
     # NB: commented-out columns are NOT filtered here — the reference's
     # Hive column regex has no comment group (alterator.py:75-78), so a
     # `-- `col` type,` line still counts as a live column on this path
@@ -247,6 +265,7 @@ def hive_diff(
         "hql_format",
         "cat_format",
         "cat_exists",
+        "iceberg",
         _column_pairs(F.col("columns"), F.col("cat")).alias("pairs"),
         part_ok.alias("part_ok"),
         part_reason.alias("part_reason"),
@@ -270,7 +289,7 @@ def hive_diff(
         F.when(F.col("table_name").isNull(), "skipped")  # TableNameNotExtracted
         .when(~F.col("is_create"), "skipped")  # NonCreateSQL
         .when(~exists, "new")
-        .when(F.col("hql_format") == "iceberg", "iceberg")
+        .when(routed, "iceberg")
         .when(
             F.col("hql_format") == "text",
             F.when(F.col("cat_format") != "TEXT", "format_changed").otherwise("non_parquet"),
@@ -324,4 +343,5 @@ def hive_diff(
         ((outcome == "iceberg") & exists & (F.col("cat_format") != "ICEBERG")).alias(
             "requires_migration"
         ),
+        "iceberg",
     )

@@ -29,9 +29,11 @@ row-local higher-order expression:
                                   moves on the driver
                                   (:func:`easy_alterator_spark.diff.report.position_moves`)
 
-The diff routes its own input: it reads only Iceberg CREATE files with
-a parsed table name (the files ``hive_diff`` can route to ``iceberg``),
-so callers pass the whole parsed corpus.
+The diff has no plan of its own: :func:`.hive.hive_diff` routes the
+Iceberg CREATE files and computes each table's diff with
+:func:`with_iceberg` over the same row, as its ``iceberg`` struct
+column. So one plan and one collect serve both paths, and
+:func:`iceberg_diff` is a projection of that column.
 
 Documented divergences from the reference (bit-rot fixed, see
 SURVEY.md §0/§7):
@@ -52,10 +54,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..ddl import types as TY
-from .hive import outer_pairs, side, sorted_by, with_catalog
+from .hive import hive_diff, outer_pairs, side, sorted_by
+
+# the Iceberg catalog every reported table name is qualified with
+CATALOG = "glue_catalog"
 
 
 _COMMON_FIELDS = ("pos", "name", "type", "is_deleted", "after", "backfilled_from", "is_first")
@@ -74,42 +78,32 @@ def _nonempty(arr: Column) -> Column:
     return F.when(F.size(arr) > 0, arr)
 
 
-def iceberg_diff(
-    parsed: DataFrame,
-    cat_cols: DataFrame,
-    cat_tables: DataFrame,
-    catalog_name: str = "glue_catalog",
-) -> DataFrame:
+def iceberg_diff(parsed: DataFrame, cat_cols: DataFrame, cat_tables: DataFrame) -> DataFrame:
     """Diff the Iceberg CREATE files of ``parsed`` against the catalog.
 
-    Returns one row per table with nested diff columns:
+    Returns one row per table, the non-NULL ``iceberg`` structs of
+    :func:`.hive.hive_diff`, with nested diff columns:
     (table_name, full_name, requires_migration, sequence_mismatch,
     error, new_cols, dropped, renamed, compatible, incompatible,
     position_candidates, first_col, part_new, part_dropped,
     part_replaced, props_new, props_removed, props_updated)
     """
-    # the iceberg diff is keyed by table; if two Iceberg CREATE files
-    # name the same table, keep the lexically-last file deterministically
-    # (the hive path is file-keyed and reports both)
-    w = Window.partitionBy("table_name").orderBy(F.col("file_path").desc())
-    routed = parsed.filter(
-        F.col("table_name").isNotNull() & F.col("is_create") & (F.col("hql_format") == "iceberg")
-    ).withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
-    tables = cat_tables.select(
-        "table_name",
-        (F.col("format") != "ICEBERG").alias("requires_migration"),
-        F.lit(True).alias("in_cat"),
-        F.map_filter(
-            F.coalesce(
-                F.col("properties").cast("map<string,string>"),
-                F.create_map().cast("map<string,string>"),
-            ),
-            lambda k, _: k != "owner",
-        ).alias("cp"),
-    )
-    base = with_catalog(routed.join(F.broadcast(tables), "table_name", "left"), cat_cols)
-    rm = F.col("requires_migration")
-    in_cat = F.coalesce("in_cat", F.lit(False))
+    out = hive_diff(parsed, cat_cols, cat_tables)
+    return out.where(F.col("iceberg").isNotNull()).select("iceberg.*")
+
+
+def with_iceberg(base: DataFrame, keep: Column) -> DataFrame:
+    """``base`` plus ``iceberg``: the Iceberg diff of each row where
+    ``keep`` holds (the fields :func:`iceberg_diff` lists), NULL on
+    every other row.
+
+    ``base`` is a :func:`.hive.hive_diff` row: one parsed DDL file, its
+    catalog table (``cat_format``, ``cat_exists``, ``cat_props``) and
+    its catalog columns (``cat``, :func:`.hive.with_catalog`).
+    """
+    rm = F.col("cat_format") != "ICEBERG"
+    in_cat = F.coalesce("cat_exists", F.lit(False))
+    on = keep & in_cat
 
     # --- both sides in comparison vocabulary ---------------------------
     # DDL columns with Iceberg flags (F7), types normalized (P7) unless
@@ -150,19 +144,22 @@ def iceberg_diff(
             F.when(rm, j + 1000).otherwise(c["field_id"]).alias("field_id"),
         ),
     )
+    no_props = F.create_map().cast("map<string,string>")
     sides = base.select(
-        "table_name",
-        "requires_migration",
+        "*",
         in_cat.alias("in_cat"),
-        _only_if(in_cat, hql).alias("hql"),
-        _only_if(in_cat, cat).alias("cat"),
-        _only_if(in_cat, cat_parts).alias("cat_parts"),
+        _only_if(on, hql).alias("hql"),
+        _only_if(on, cat).alias("ice_cat"),
+        _only_if(on, cat_parts).alias("cat_parts"),
         # ids were assigned before the filter
         F.filter("iceberg_partitions", lambda p: ~p["commented"]).alias("hql_parts"),
-        F.coalesce("tblprops", F.create_map().cast("map<string,string>")).alias("hp"),
-        F.coalesce("cp", F.create_map().cast("map<string,string>")).alias("cp"),
+        F.coalesce("tblprops", no_props).alias("hp"),
+        F.map_filter(
+            F.coalesce(F.col("cat_props").cast("map<string,string>"), no_props),
+            lambda k, _: k != "owner",
+        ).alias("cp"),
     )
-    hql, cat = F.col("hql"), F.col("cat")
+    hql, cat = F.col("hql"), F.col("ice_cat")
 
     # --- J6: DDL columns paired with same-named catalog columns ---------
     common = F.flatten(
@@ -327,13 +324,7 @@ def iceberg_diff(
         lambda u: u["name"],
     )
     out = joined.select(
-        "table_name",
-        "requires_migration",
-        "in_cat",
-        "hp",
-        "cp",
-        "hql",
-        "cat",
+        "*",
         updated.alias("updated"),
         cands.alias("cands"),
         deletes.alias("deletes"),
@@ -345,9 +336,9 @@ def iceberg_diff(
         F.when(has_parts, part_replaced).alias("part_replaced"),
     )
     upd = F.col("updated")
-    return out.select(
+    diff = F.struct(
         "table_name",
-        F.concat(F.lit(catalog_name + "."), "table_name").alias("full_name"),
+        F.concat(F.lit(CATALOG + "."), "table_name").alias("full_name"),
         F.coalesce(rm, F.lit(False)).alias("requires_migration"),
         F.coalesce(rm & (sequence(hql, "pos") != sequence(cat, "position")), F.lit(False)).alias(
             "sequence_mismatch"
@@ -407,6 +398,7 @@ def iceberg_diff(
                 lambda k, v: F.array_contains(F.map_keys("cp"), k)
                 & (v != F.element_at(F.col("cp"), k)),
             ),
-            F.create_map().cast("map<string,string>"),
+            no_props,
         ).alias("props_updated"),
     )
+    return out.select(*base.columns, F.when(keep, diff).alias("iceberg"))

@@ -1,10 +1,12 @@
 """Run-report assembly (A1): outcome rows -> the reference's JSON shape.
 
 The heavy lifting (routing, joins, classification) happens in Spark;
-this module collects the outcome rows — tiny by construction, one row
-per DDL file or Iceberg table — and shapes the nested report exactly
-like the reference's ``get_results`` (alterator.py:741-796) and the
-Iceberg handler's cleaned nested dict (iceberg_schema_handler.py:578-700).
+this module collects the outcome rows of the one diff plan
+(:func:`easy_alterator_spark.diff.hive.hive_diff`) in one action — tiny
+by construction, one row per DDL file, each Iceberg table's diff riding
+on one of its rows — and shapes the nested report exactly like the
+reference's ``get_results`` (alterator.py:741-796) and the Iceberg
+handler's cleaned nested dict (iceberg_schema_handler.py:578-700).
 It orders each Iceberg table's column moves on the driver
 (:func:`position_moves`), as the reference does.
 """
@@ -119,37 +121,34 @@ def _nt(lst) -> list[dict[str, str]]:
     return [{"Name": c["Name"], "Type": c["Type"]} for c in (lst or [])]
 
 
-def build_report(
-    hive_outcomes: DataFrame,
-    iceberg_results: DataFrame | None = None,
-    versions: dict[str, str] | None = None,
-    validate: bool = True,
-    force: bool = False,
-) -> dict[str, Any]:
-    """Collect outcome rows and shape the reference report JSON.
+def build_report(outcomes: DataFrame, validate: bool = True, force: bool = False) -> dict[str, Any]:
+    """Collect the outcome rows once and shape the reference report JSON.
 
     Args:
-        hive_outcomes: output of :func:`easy_alterator_spark.diff.hive.hive_diff`.
-        iceberg_results: output of
-            :func:`easy_alterator_spark.diff.iceberg.iceberg_diff` on the
-            same parsed corpus (None: no Iceberg path).
-        versions: table_name -> catalog version id (for the success
-            version bracket; validate mode reports prev == current).
+        outcomes: output of :func:`easy_alterator_spark.diff.hive.hive_diff`.
+            A first pass reads the Iceberg diffs off its ``iceberg``
+            column; a second shapes every file's outcome.
+
+    Success entries carry ``previous_version``/``current_version`` as
+    None; :func:`easy_alterator_spark.cli.run_alterator` fills them from
+    the catalog around the apply.
     """
-    versions = versions or {}
+    rows = outcomes.collect()
     ice_entries: dict[str, dict[str, Any]] = {}
     ice_errors: dict[str, str] = {}
-    if iceberg_results is not None:
-        for r in iceberg_results.collect():
-            if r["error"]:
-                ice_errors[r["table_name"]] = r["error"]
-            else:
-                ice_entries[r["table_name"]] = _row_to_iceberg_entry(r)
+    for r in rows:
+        ice = r["iceberg"]
+        if ice is None:
+            continue
+        if ice["error"]:
+            ice_errors[ice["table_name"]] = ice["error"]
+        else:
+            ice_entries[ice["table_name"]] = _row_to_iceberg_entry(ice)
 
     success, skipped, new, identical = [], [], [], []
     errored, non_parquet, iceberg, format_changed = [], [], [], []
 
-    for r in hive_outcomes.collect():
+    for r in rows:
         o = r["outcome"]
         if o == "skipped":
             if r["reason"] in ("TableNameNotExtracted", "NonCreateSQL"):
@@ -239,12 +238,11 @@ def build_report(
         elif o == "identical":
             identical.append(r["table_name"])
         elif o == "success":
-            v = versions.get(r["table_name"])
             success.append(
                 {
                     "table_name": r["table_name"],
-                    "previous_version": v,
-                    "current_version": v,
+                    "previous_version": None,
+                    "current_version": None,
                     "details": {"add": _nt(r["add"]), "delete": _nt(r["delete"])},
                 }
             )

@@ -124,41 +124,14 @@ def ddl_iceberg_diff(spark, sf_dir):
     ).orderBy("table_name")
 
 
-# (session id, n_tables) -> cached (parsed, cat_cols, cat_tables).
-# The parsed-DDL corpus is the diff's INPUT: hive_diff's outcome
-# branches read it several times, and without a persist each branch
-# re-executes the whole regex-parse subtree. Real deployments persist
-# the parsed corpus once per run for the same reason; memoizing per
-# session also matches the bench's warm-input methodology (parquet
-# inputs of every other query are OS-page-cached across runs too).
-_BULK_CACHE: dict = {}
-
-
 def _bulk_fixture(spark, n_tables: int = 500):
     """Deterministic n-table corpus + catalog with mixed drift: every
     5th table adds a column, every 7th retypes (incompatible), every
     11th widens (compatible), every 13th drops; the rest are identical.
     This is the schema-diff THROUGHPUT surface (BASELINE.md: >=458
     tables/run) — one Spark plan, no per-table loop, no catalog calls
-    from executors."""
-    # applicationId, not id(spark): CPython reuses object addresses, so
-    # a stopped session followed by a new one at the same address would
-    # resurrect DataFrames bound to a dead JVM
-    key = (spark.sparkContext.applicationId, n_tables)
-    if key in _BULK_CACHE:
-        return _BULK_CACHE[key]
-    # LRU-1: a new key means a new session (or fixture size) — evict
-    # everything else and UNPERSIST the evicted DataFrames so executor
-    # storage is released rather than leaked for the process lifetime.
-    # Unpersist can race a stopped session's dead JVM; that eviction
-    # is then a no-op (the storage died with the JVM anyway).
-    for old_key in list(_BULK_CACHE):
-        old_parsed, old_cc, _ = _BULK_CACHE.pop(old_key)
-        for df in (old_parsed, old_cc):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+    from executors. The frames are built and parsed anew on each call:
+    no state carries one timed run into the next."""
     ddls, cat_cols, cat_tables = [], [], []
     for i in range(n_tables):
         t = f"bulk.t{i:04d}"
@@ -183,11 +156,11 @@ def _bulk_fixture(spark, n_tables: int = 500):
     from ..ddl.parser import corpus_from_rows, parse_ddl_corpus
     from ..diff.catalog import COLS_SCHEMA, TABLES_SCHEMA
 
-    parsed = parse_ddl_corpus(corpus_from_rows(spark, ddls)).cache()
-    cc = spark.createDataFrame(cat_cols, COLS_SCHEMA).repartition(8, "table_name").cache()
-    ct = spark.createDataFrame(cat_tables, TABLES_SCHEMA)
-    _BULK_CACHE[key] = (parsed, cc, ct)
-    return parsed, cc, ct
+    return (
+        parse_ddl_corpus(corpus_from_rows(spark, ddls)),
+        spark.createDataFrame(cat_cols, COLS_SCHEMA),
+        spark.createDataFrame(cat_tables, TABLES_SCHEMA),
+    )
 
 
 @query("ddl_diff_bulk")  # throughput surface; rows-only check

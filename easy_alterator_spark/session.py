@@ -66,7 +66,7 @@ GLUE_CONFS: dict[str, str] = {
         "com.amazonaws.glue.catalog.metastore.AWSGlueDataCatalogHiveClientFactory"
     ),
     # Iceberg GlueCatalog route (covers the ICEBERG path); the catalog
-    # name matches diff/iceberg.py's default `glue_catalog`
+    # name matches diff/iceberg.py's CATALOG `glue_catalog`
     "spark.sql.catalog.glue_catalog": "org.apache.iceberg.spark.SparkCatalog",
     "spark.sql.catalog.glue_catalog.catalog-impl": "org.apache.iceberg.aws.glue.GlueCatalog",
     "spark.sql.catalog.glue_catalog.io-impl": "org.apache.iceberg.aws.s3.S3FileIO",

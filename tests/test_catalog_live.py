@@ -357,8 +357,9 @@ class TestGlueBacked:
 class TestRunJobs:
     def test_validate_run_job_count(self, spark, db, ice_table, tmp_path):
         """run_alterator(validate=True) over a Hive add, an Iceberg column
-        move and a new table: the parsed-table collect plus one collect per
-        diff, counted through a job group, which host load cannot move."""
+        move and a new table: the parsed-table collect plus the one collect
+        of the one diff plan, counted through a job group, which host load
+        cannot move."""
         from easy_alterator_spark.cli import run_alterator
 
         t = f"{db}.jobs_hive"
@@ -394,4 +395,4 @@ class TestRunJobs:
         assert e["columns"]["updated"]["position_changes"] == [
             {"name": "day_rk", "after": "col1", "reason": "direct"}
         ]
-        assert len(jobs) == 13
+        assert len(jobs) == 9

@@ -149,18 +149,23 @@ def _frames(spark, ddls: dict, cat_cols: list, cat_tables: list, account: str = 
 
 
 def _diff_case(parsed, cat_cols, cat_tables, force: bool, versions=None) -> dict:
-    """Both diffs over the whole parsed corpus plus the report, wired as
-    ``cli.run_alterator`` wires them."""
+    """The diff over the whole parsed corpus, its Iceberg projection and
+    the report, wired as ``cli.run_alterator`` wires them: the success
+    versions are filled after ``build_report``. The ``hive`` rows leave
+    out the ``iceberg`` struct, which the ``iceberg`` rows hold."""
     from easy_alterator_spark.diff import build_report, hive_diff, iceberg_diff
 
     outcomes = hive_diff(parsed, cat_cols, cat_tables, force=force)
     ice = iceberg_diff(parsed, cat_cols, cat_tables)
+    report = build_report(outcomes, force=force)
+    for e in report["success_tables"]:
+        e["previous_version"] = e["current_version"] = (versions or {}).get(e["table_name"])
     return {
         "hive_schema": outcomes.schema.simpleString(),
         "iceberg_schema": ice.schema.simpleString(),
-        "hive": _rows(outcomes, "file_path"),
+        "hive": _rows(outcomes.drop("iceberg"), "file_path"),
         "iceberg": _rows(ice, "table_name"),
-        "report": _report(build_report(outcomes, ice, versions=versions, force=force)),
+        "report": _report(report),
     }
 
 

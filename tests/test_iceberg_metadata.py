@@ -62,7 +62,7 @@ def test_parse_metadata_rows():
 
 def test_read_via_spark_and_diff(spark, meta_file):
     from easy_alterator_spark.ddl.parser import corpus_from_rows, parse_ddl_corpus
-    from easy_alterator_spark.diff import build_report, hive_diff, iceberg_diff
+    from easy_alterator_spark.diff import build_report, hive_diff
     from easy_alterator_spark.diff.iceberg_metadata import read_metadata_files
 
     cat_cols, props = read_metadata_files(spark, {"db.t": meta_file})
@@ -87,9 +87,7 @@ def test_read_via_spark_and_diff(spark, meta_file):
         TBLPROPERTIES('write.merge.mode'='merge-on-read');
     """
     parsed = parse_ddl_corpus(corpus_from_rows(spark, [("m/t.hql", ddl)]))
-    outcomes = hive_diff(parsed, cat_cols, cat_tables)
-    ice = iceberg_diff(parsed, cat_cols, cat_tables)
-    report = build_report(outcomes, ice)
+    report = build_report(hive_diff(parsed, cat_cols, cat_tables))
     # identical except the rename; ts_col: metadata timestamptz ->
     # spark timestamp == DDL timestamp -> timestamptz? (both normalize
     # through the comparison vocabulary and must NOT show as updated)

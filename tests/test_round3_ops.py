@@ -368,34 +368,6 @@ class TestQuantizeReport:
         assert r["mse"] == 0.0 and r["max_abs_err"] == 0.0
 
 
-class TestBulkFixtureCacheEviction:
-    def test_new_key_evicts_and_unpersists_previous(self, spark):
-        """LRU-1 (r3 verdict task 9): building the bulk-diff fixture
-        under a NEW cache key must evict the previous entry AND
-        unpersist its cached DataFrames — without this the persisted
-        parsed corpus leaks executor storage for the process lifetime
-        (a second session's key would strand the first's cache)."""
-        from easy_alterator_spark.queries import schema_tools as ST
-
-        ST._BULK_CACHE.clear()
-        p1, cc1, _ = ST._bulk_fixture(spark, 20)
-        assert p1.is_cached and cc1.is_cached
-        assert len(ST._BULK_CACHE) == 1
-        # different n_tables -> different key == what a second
-        # session's applicationId change produces
-        p2, cc2, _ = ST._bulk_fixture(spark, 30)
-        assert len(ST._BULK_CACHE) == 1
-        assert list(ST._BULK_CACHE)[0][1] == 30
-        assert not p1.is_cached and not cc1.is_cached
-        assert p2.is_cached and cc2.is_cached
-        # hit path: same key returns the same objects, no eviction
-        p2b, _, _ = ST._bulk_fixture(spark, 30)
-        assert p2b is p2 and p2.is_cached
-        ST._BULK_CACHE.clear()
-        for df in (p2, cc2):
-            df.unpersist()
-
-
 class TestDfPrunedMinhash:
     def test_pruning_reveals_planted_pairs(self, spark):
         """Boilerplate tokens (df=1.0) drown near-dup signal: without

@@ -200,9 +200,9 @@ CAT_TABLES = [
 
 
 @pytest.fixture(scope="module")
-def report(spark):
+def frames(spark):
+    """(parsed, cat_cols, cat_tables) of the module corpus."""
     from easy_alterator_spark.ddl.parser import corpus_from_rows, parse_ddl_corpus
-    from easy_alterator_spark.diff import build_report, hive_diff, iceberg_diff
 
     corpus = corpus_from_rows(
         spark, [(p, d) for p, d in DDLS.items()], aws_account_id="123456789012"
@@ -216,12 +216,21 @@ def report(spark):
         CAT_TABLES,
         TABLES_SCHEMA,
     )
+    yield parsed, cat_cols, cat_tables
+    parsed.unpersist()
+
+
+@pytest.fixture(scope="module")
+def report(frames):
+    """The module corpus's report, its success versions filled from the
+    catalog snapshot as ``cli.run_alterator`` fills them."""
+    from easy_alterator_spark.diff import build_report, hive_diff
+
+    report = build_report(hive_diff(*frames))
     versions = {t: v for (t, _tt, _f, _m, _p, v) in CAT_TABLES}
-    return build_report(
-        hive_diff(parsed, cat_cols, cat_tables),
-        iceberg_diff(parsed, cat_cols, cat_tables),
-        versions=versions,
-    )
+    for e in report["success_tables"]:
+        e["previous_version"] = e["current_version"] = versions[e["table_name"]]
+    return report
 
 
 def by_table(entries, name, key="table_name"):
@@ -373,6 +382,35 @@ class TestIcebergPath:
         assert e["sequenceMismatch"] == "True"
 
 
+class TestOneCollect:
+    def test_iceberg_tables_are_not_reported_identical(self, report):
+        """The diff plan alone carries every Iceberg table's diff: the
+        tables that change stay out of ``identical_tables``, and both
+        migration tables are reported."""
+        assert sorted(report["identical_tables"]) == ["db.ice_ident", "sdb.ident"]
+        assert sorted(e["table_name"] for e in report["iceberg_tables"]) == [
+            "glue_catalog.db.ice",
+            "glue_catalog.db.pos",
+            "glue_catalog.sdb.mig",
+            "glue_catalog.sdb.mig_seq",
+        ]
+
+    def test_iceberg_diff_is_the_iceberg_column(self, frames):
+        """``iceberg_diff`` is the non-NULL ``iceberg`` structs of the one
+        diff plan: one per routed table, every other file's NULL."""
+        from easy_alterator_spark.diff import hive_diff, iceberg_diff
+
+        rows = hive_diff(*frames).select("file_path", "outcome", "iceberg").collect()
+        routed = {r["file_path"] for r in rows if r["iceberg"] is not None}
+        assert routed == {
+            f"hql/{n}.hql" for n in ("ice", "pos", "ice_ident", "ice_err", "mig", "mig_seq")
+        }
+        assert {r["outcome"] for r in rows if r["iceberg"] is not None} == {"iceberg"}
+        assert sorted(r["iceberg"] for r in rows if r["iceberg"] is not None) == sorted(
+            iceberg_diff(*frames).collect()
+        )
+
+
 class TestStats:
     def test_counters(self, report):
         s = report["ResponseMetadata"]["stats"]
@@ -431,7 +469,7 @@ class TestForceMode:
 class TestDuplicateFiles:
     def test_two_iceberg_files_same_table_pick_last(self, spark):
         from easy_alterator_spark.ddl.parser import corpus_from_rows, parse_ddl_corpus
-        from easy_alterator_spark.diff import iceberg_diff
+        from easy_alterator_spark.diff import build_report, hive_diff, iceberg_diff
 
         corpus = corpus_from_rows(
             spark,
@@ -453,6 +491,12 @@ class TestDuplicateFiles:
         assert len(rows) == 1
         # lexically-last file wins; no cross-file contamination
         assert [c["name"] for c in rows[0]["new_cols"]] == ["fresh"]
+        # and the report's entry is the last file's
+        report = build_report(hive_diff(parsed, cat_cols, cat_tables))
+        entries = report["iceberg_tables"]
+        assert entries
+        for e in entries:
+            assert [c["name"] for c in e["columns"]["new"]] == ["fresh"]
 
     def test_hive_file_for_an_iceberg_table_stays_off_the_iceberg_path(self, spark):
         """An Iceberg and a Hive CREATE file name one Iceberg table. Only
@@ -483,7 +527,7 @@ class TestDuplicateFiles:
         assert (row["error"], row["new_cols"], row["dropped"], row["incompatible"]) == (
             None, None, None, None,
         )
-        report = build_report(hive_diff(parsed, cat_cols, cat_tables), ice)
+        report = build_report(hive_diff(parsed, cat_cols, cat_tables))
         assert report["identical_tables"] == ["db.t"]
         assert report["iceberg_tables"] == []
         # the Hive file alone: a managed CREATE is errored on the Hive path
