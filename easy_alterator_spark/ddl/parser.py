@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # Type token. The reference's column regex only matches scalar types
 # (alterator.py:75-78 / iceberg_schema_handler.py:65-68 — its silent
 # nested-type gap); SURVEY §1.3 directs this engine to close it. Java
@@ -84,8 +86,11 @@ def read_ddl_corpus(
 def corpus_from_rows(
     spark: SparkSession, rows: list[tuple[str, str]], aws_account_id: str = ""
 ) -> DataFrame:
-    """Corpus from in-memory (file_path, ddl_text) rows (tests/fixtures)."""
-    raw = spark.createDataFrame(rows, "file_path string, ddl string")
+    """Corpus from in-memory (file_path, ddl_text) rows (tests/fixtures),
+    as a local relation built over Arrow
+    (:func:`easy_alterator_spark.session.local_frame`), normalized as
+    :func:`read_ddl_corpus` normalizes files."""
+    raw = local_frame(spark, rows, "file_path string, ddl string")
     return normalize_corpus(raw, aws_account_id)
 
 

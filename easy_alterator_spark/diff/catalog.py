@@ -11,9 +11,12 @@ B2/B3 DataFrames the diff engine consumes) and the version digest: two
 round trips per table, ``tableExists`` then ``DESCRIBE TABLE EXTENDED
 … AS JSON`` — the counterpart of the reference's one ``get_table``
 response (typed columns, partition columns, provider, Hive storage
-classes, properties as a map). Catalog *writes* stay driver-side
-sequential (DDL is a metadata operation; never issue it from executors
-— SURVEY.md §4.2).
+classes, properties as a map). The snapshot rows are gathered on the
+driver and handed to the JVM as local relations
+(:func:`easy_alterator_spark.session.local_frame`), so the diff plans
+over them run in the JVM alone and a CLI run starts no Python worker.
+Catalog *writes* stay driver-side sequential (DDL is a metadata
+operation; never issue it from executors — SURVEY.md §4.2).
 
 For live ICEBERG tables the column snapshot comes from the table's
 ``metadata.json`` (via :mod:`.iceberg_metadata`), NOT from the
@@ -32,7 +35,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import GLUE_FACTORY_KEY
+from ..session import GLUE_FACTORY_KEY, local_frame
 
 # The snapshot frames' schemas (FIXTURES.md B2/B3); every producer of
 # a catalog snapshot, live or fixture, builds its frames from these.
@@ -126,7 +129,9 @@ def snapshot_catalog(spark: SparkSession, tables: list[str]) -> tuple[DataFrame,
     same as the reference's Glue round-trips — but the snapshot is
     taken ONCE and the diff itself is a single distributed plan, so
     catalog latency is O(tables) while diff cost is O(columns)
-    distributed.
+    distributed. Both frames are local relations built over Arrow
+    (:func:`easy_alterator_spark.session.local_frame`): a job that
+    scans them starts no Python worker.
 
     ICEBERG tables that expose a ``metadata_location`` property get
     their columns (with REAL field ids), partition spec, and properties
@@ -156,7 +161,7 @@ def snapshot_catalog(spark: SparkSession, tables: list[str]) -> tuple[DataFrame,
                 col_rows.append((table, c["name"].lower(), col_type, pos[is_part], is_part, None))
                 pos[is_part] += 1
         tbl_rows.append((table, "EXTERNAL_TABLE", fmt, meta_loc, props, "0"))
-    cols_df = spark.createDataFrame(col_rows, COLS_SCHEMA)
+    cols_df = local_frame(spark, col_rows, COLS_SCHEMA)
     if ice_locations:
         meta_cols, meta_props = read_metadata_files(spark, ice_locations)
         cols_df = cols_df.unionByName(meta_cols)
@@ -166,7 +171,7 @@ def snapshot_catalog(spark: SparkSession, tables: list[str]) -> tuple[DataFrame,
             (t, tt, fmt, loc, meta_props.get(t, props), ver)
             for (t, tt, fmt, loc, props, ver) in tbl_rows
         ]
-    return cols_df, spark.createDataFrame(tbl_rows, TABLES_SCHEMA)
+    return cols_df, local_frame(spark, tbl_rows, TABLES_SCHEMA)
 
 
 # Injected boto3 Glue client (tests pass a moto client; production

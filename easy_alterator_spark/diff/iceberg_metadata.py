@@ -18,6 +18,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
 from .catalog import COLS_SCHEMA
 
 
@@ -66,7 +67,7 @@ def read_metadata_files(
     per-table properties). Paths may be local, s3://, hdfs:// — any
     Hadoop-visible filesystem."""
     if not locations:
-        return spark.createDataFrame([], COLS_SCHEMA), {}
+        return local_frame(spark, [], COLS_SCHEMA), {}
     texts = (
         spark.read.text(list(locations.values()), wholetext=True)
         .selectExpr("input_file_name() as path", "value")
@@ -82,4 +83,4 @@ def read_metadata_files(
         t_rows, t_props = parse_metadata(json.loads(text), table)
         rows.extend(t_rows)
         props[table] = t_props
-    return spark.createDataFrame(rows, COLS_SCHEMA), props
+    return local_frame(spark, rows, COLS_SCHEMA), props

@@ -126,29 +126,17 @@ def build_report(outcomes: DataFrame, validate: bool = True, force: bool = False
 
     Args:
         outcomes: output of :func:`easy_alterator_spark.diff.hive.hive_diff`.
-            A first pass reads the Iceberg diffs off its ``iceberg``
-            column; a second shapes every file's outcome.
+            Each Iceberg table is reported once, from the one routed
+            file whose ``iceberg`` column carries the table's diff.
 
     Success entries carry ``previous_version``/``current_version`` as
     None; :func:`easy_alterator_spark.cli.run_alterator` fills them from
     the catalog around the apply.
     """
-    rows = outcomes.collect()
-    ice_entries: dict[str, dict[str, Any]] = {}
-    ice_errors: dict[str, str] = {}
-    for r in rows:
-        ice = r["iceberg"]
-        if ice is None:
-            continue
-        if ice["error"]:
-            ice_errors[ice["table_name"]] = ice["error"]
-        else:
-            ice_entries[ice["table_name"]] = _row_to_iceberg_entry(ice)
-
     success, skipped, new, identical = [], [], [], []
     errored, non_parquet, iceberg, format_changed = [], [], [], []
 
-    for r in rows:
+    for r in outcomes.collect():
         o = r["outcome"]
         if o == "skipped":
             if r["reason"] in ("TableNameNotExtracted", "NonCreateSQL"):
@@ -208,6 +196,9 @@ def build_report(outcomes: DataFrame, validate: bool = True, force: bool = False
                 }
             )
         elif o == "iceberg":
+            ice = r["iceberg"]
+            if ice is None:  # another file naming the table carries its diff
+                continue
             if r["format_change"] is not None:
                 fc = r["format_change"]
                 format_changed.append(
@@ -217,16 +208,16 @@ def build_report(outcomes: DataFrame, validate: bool = True, force: bool = False
                         "table_name": r["table_name"],
                     }
                 )
-            if r["table_name"] in ice_errors:
+            if ice["error"]:
                 errored.append(
                     {
                         "table_name": r["table_name"],
                         "reason": "ValidationError",
-                        "error": ice_errors[r["table_name"]],
+                        "error": ice["error"],
                     }
                 )
             else:
-                entry = ice_entries.get(r["table_name"], {})
+                entry = _row_to_iceberg_entry(ice)
                 has_updates = any(
                     entry.get(k)
                     for k in ("columns", "partition_columns", "tblprops", "sequenceMismatch")

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import query
 
 _DDLS = [
@@ -83,8 +84,8 @@ def _fixtures(spark):
     from ..diff.catalog import COLS_SCHEMA, TABLES_SCHEMA
 
     parsed = parse_ddl_corpus(corpus_from_rows(spark, _DDLS))
-    cat_cols = spark.createDataFrame(_CAT_COLS, COLS_SCHEMA)
-    cat_tables = spark.createDataFrame(_CAT_TABLES, TABLES_SCHEMA)
+    cat_cols = local_frame(spark, _CAT_COLS, COLS_SCHEMA)
+    cat_tables = local_frame(spark, _CAT_TABLES, TABLES_SCHEMA)
     return parsed, cat_cols, cat_tables
 
 
@@ -158,8 +159,8 @@ def _bulk_fixture(spark, n_tables: int = 500):
 
     return (
         parse_ddl_corpus(corpus_from_rows(spark, ddls)),
-        spark.createDataFrame(cat_cols, COLS_SCHEMA),
-        spark.createDataFrame(cat_tables, TABLES_SCHEMA),
+        local_frame(spark, cat_cols, COLS_SCHEMA),
+        local_frame(spark, cat_tables, TABLES_SCHEMA),
     )
 
 

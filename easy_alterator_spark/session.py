@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Local test default. On a real cluster this should scale with input
 # size: ~2-3x total executor cores, or simply rely on AQE coalescing
@@ -157,3 +158,22 @@ def get_spark(
         for k, v in GLUE_CONFS.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A frame of driver-held ``rows`` typed by the DDL ``schema``.
+
+    The rows cross to the JVM as one Arrow table and become a
+    ``LocalRelation``: jobs that scan it run in the JVM alone. The list
+    form of ``createDataFrame`` builds a Python RDD instead, and every
+    job over it starts a Python worker to re-serialize the rows. Arrow
+    raises on a value that does not fit its column's type.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table)

@@ -13,6 +13,8 @@
 - a Glue-backed session brackets with native Glue version ids.
 - a validate run over a small mixed corpus launches a fixed number of
   Spark jobs.
+- the live snapshot is a pair of local relations, so the diff over it
+  starts no Python worker.
 """
 
 from __future__ import annotations
@@ -352,6 +354,39 @@ class TestGlueBacked:
             assert cat.table_version(spark, t) == f"v-{t}"
         finally:
             spark.conf.unset(key)
+
+
+class TestNoPythonWorker:
+    def test_diff_over_live_snapshot_scans_no_python_rdd(self, spark, db, ice_table, tmp_path):
+        """The DDL files are read by Spark and the snapshot rows cross to
+        the JVM over Arrow: both snapshot frames, the Iceberg table's
+        metadata.json rows included, plan as local table scans, and the
+        executed diff holds no Python RDD scan (``ExistingRDD``) and no
+        Python evaluation node."""
+        from easy_alterator_spark.ddl.parser import parse_ddl_corpus, read_ddl_corpus
+        from easy_alterator_spark.diff import hive_diff
+        from easy_alterator_spark.diff.catalog import snapshot_catalog
+        from easy_alterator_spark.plans.audit import executed_plan
+
+        t = f"{db}.nopy_hive"
+        spark.sql(f"CREATE TABLE {t} (id INT) USING parquet")
+        (tmp_path / "hive.hql").write_text(
+            f"CREATE EXTERNAL TABLE `{t}`(`id` int, `n1` string) STORED AS PARQUET;"
+        )
+        (tmp_path / "ice.hql").write_text(
+            f"CREATE TABLE `{ice_table}` (`col1` string, `amount` bigint, `day_rk` date)"
+            " USING iceberg PARTITIONED BY (`day_rk`);"
+        )
+        parsed = parse_ddl_corpus(read_ddl_corpus(spark, str(tmp_path)))
+        cat_cols, cat_tables = snapshot_catalog(spark, [t, ice_table])
+        assert {r["table_name"] for r in cat_cols.collect()} == {t, ice_table}
+        for frame in (cat_cols, cat_tables):
+            plan = executed_plan(frame)
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+        plan = executed_plan(hive_diff(parsed, cat_cols, cat_tables))
+        for node in ("ExistingRDD", "ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas"):
+            assert node not in plan, node
 
 
 class TestRunJobs:

@@ -31,6 +31,7 @@ import os
 import pytest
 
 from easy_alterator_spark.diff.catalog import COLS_SCHEMA, TABLES_SCHEMA
+from easy_alterator_spark.session import local_frame
 
 from .test_schema_diff import CAT_COLS, CAT_TABLES, DDLS
 
@@ -143,8 +144,8 @@ def _frames(spark, ddls: dict, cat_cols: list, cat_tables: list, account: str = 
     )
     return (
         parsed,
-        spark.createDataFrame(cat_cols, COLS_SCHEMA),
-        spark.createDataFrame(cat_tables, TABLES_SCHEMA),
+        local_frame(spark, cat_cols, COLS_SCHEMA),
+        local_frame(spark, cat_tables, TABLES_SCHEMA),
     )
 
 

@@ -136,12 +136,14 @@ class TestSchemaDiffPlanShape:
     @pytest.mark.parametrize("name", ["hive_diff", "iceberg_diff"])
     def test_diff_starts_no_python_worker(self, diffs, name):
         """Column moves are ordered on the driver after the collect
-        (``report.position_moves``): the executed diff plans hold no
-        Python evaluation node, so a CLI run launches no Python worker."""
+        (``report.position_moves``), and the snapshot and corpus frames
+        are local relations (``session.local_frame``): the executed diff
+        plans hold no Python evaluation node and no scan of a Python
+        RDD, so a CLI run launches no Python worker."""
         from easy_alterator_spark.plans.audit import executed_plan
 
         plan = executed_plan(diffs[name])
-        for node in ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas"):
+        for node in ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas", "ExistingRDD"):
             assert node not in plan, (name, node)
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 from easy_alterator_spark.diff.catalog import COLS_SCHEMA, TABLES_SCHEMA
+from easy_alterator_spark.session import local_frame
 
 sf = None  # tests here don't touch the relational test data
 
@@ -208,14 +209,8 @@ def frames(spark):
         spark, [(p, d) for p, d in DDLS.items()], aws_account_id="123456789012"
     )
     parsed = parse_ddl_corpus(corpus).cache()
-    cat_cols = spark.createDataFrame(
-        CAT_COLS,
-        COLS_SCHEMA,
-    )
-    cat_tables = spark.createDataFrame(
-        CAT_TABLES,
-        TABLES_SCHEMA,
-    )
+    cat_cols = local_frame(spark, CAT_COLS, COLS_SCHEMA)
+    cat_tables = local_frame(spark, CAT_TABLES, TABLES_SCHEMA)
     yield parsed, cat_cols, cat_tables
     parsed.unpersist()
 
@@ -444,11 +439,13 @@ class TestForceMode:
             )],
         )
         parsed = parse_ddl_corpus(corpus)
-        cat_cols = spark.createDataFrame(
+        cat_cols = local_frame(
+            spark,
             [("fdb.t", "m", "bigint", 0, False, None), ("fdb.t", "k", "int", 1, False, None)],
             COLS_SCHEMA,
         )
-        cat_tables = spark.createDataFrame(
+        cat_tables = local_frame(
+            spark,
             [("fdb.t", "EXTERNAL_TABLE", "PARQUET", None, {}, "9")],
             TABLES_SCHEMA,
         )
@@ -479,11 +476,13 @@ class TestDuplicateFiles:
             ],
         )
         parsed = parse_ddl_corpus(corpus)
-        cat_cols = spark.createDataFrame(
+        cat_cols = local_frame(
+            spark,
             [("ddb.t", "x", "string", 0, False, 1)],
             COLS_SCHEMA,
         )
-        cat_tables = spark.createDataFrame(
+        cat_tables = local_frame(
+            spark,
             [("ddb.t", "EXTERNAL_TABLE", "ICEBERG", "s3://m", {}, "1")],
             TABLES_SCHEMA,
         )
@@ -491,12 +490,13 @@ class TestDuplicateFiles:
         assert len(rows) == 1
         # lexically-last file wins; no cross-file contamination
         assert [c["name"] for c in rows[0]["new_cols"]] == ["fresh"]
-        # and the report's entry is the last file's
+        # the report lists the table once, with the last file's entry
         report = build_report(hive_diff(parsed, cat_cols, cat_tables))
-        entries = report["iceberg_tables"]
-        assert entries
-        for e in entries:
-            assert [c["name"] for c in e["columns"]["new"]] == ["fresh"]
+        [e] = report["iceberg_tables"]
+        assert [c["name"] for c in e["columns"]["new"]] == ["fresh"]
+        stats = report["ResponseMetadata"]["stats"]
+        assert stats["num_iceberg_tables"] == 1
+        assert stats["num_tables_analyzed"] == 1
 
     def test_hive_file_for_an_iceberg_table_stays_off_the_iceberg_path(self, spark):
         """An Iceberg and a Hive CREATE file name one Iceberg table. Only
@@ -515,11 +515,13 @@ class TestDuplicateFiles:
                 ],
             )
         )
-        cat_cols = spark.createDataFrame(
+        cat_cols = local_frame(
+            spark,
             [("db.t", "id", "long", 0, False, 1), ("db.t", "x", "string", 1, False, 2)],
             COLS_SCHEMA,
         )
-        cat_tables = spark.createDataFrame(
+        cat_tables = local_frame(
+            spark,
             [("db.t", "EXTERNAL_TABLE", "ICEBERG", "s3://m", {}, "1")], TABLES_SCHEMA
         )
         ice = iceberg_diff(parsed, cat_cols, cat_tables)
@@ -563,7 +565,8 @@ class TestNestedTypes:
             )],
         )
         parsed = parse_ddl_corpus(corpus)
-        cat_cols = spark.createDataFrame(
+        cat_cols = local_frame(
+            spark,
             [
                 ("ndb.nested", "id", "int", 0, False, None),
                 ("ndb.nested", "ev", "array<struct<k:string,v:int>>", 1, False, None),
@@ -573,7 +576,8 @@ class TestNestedTypes:
             ],
             COLS_SCHEMA,
         )
-        cat_tables = spark.createDataFrame(
+        cat_tables = local_frame(
+            spark,
             [("ndb.nested", "EXTERNAL_TABLE", "PARQUET", None, {}, "4")],
             TABLES_SCHEMA,
         )
@@ -619,11 +623,13 @@ class TestNestedTypes:
             )],
         )
         parsed = parse_ddl_corpus(corpus)
-        cat_cols = spark.createDataFrame(
+        cat_cols = local_frame(
+            spark,
             [("ndb.same", "ev", "array<struct<k:string,v:int>>", 0, False, None)],
             COLS_SCHEMA,
         )
-        cat_tables = spark.createDataFrame(
+        cat_tables = local_frame(
+            spark,
             [("ndb.same", "EXTERNAL_TABLE", "PARQUET", None, {}, "1")],
             TABLES_SCHEMA,
         )
@@ -645,11 +651,13 @@ class TestNestedTypes:
             )],
         )
         parsed = parse_ddl_corpus(corpus)
-        cat_cols = spark.createDataFrame(
+        cat_cols = local_frame(
+            spark,
             [("ndb.ni", "ev", "array<struct<k:string,v:int>>", 0, False, 1)],
             COLS_SCHEMA,
         )
-        cat_tables = spark.createDataFrame(
+        cat_tables = local_frame(
+            spark,
             [("ndb.ni", "EXTERNAL_TABLE", "ICEBERG", "s3://m", {}, "1")],
             TABLES_SCHEMA,
         )
@@ -692,7 +700,8 @@ class TestIcebergPartitionTransforms:
             )],
         )
         parsed = parse_ddl_corpus(corpus)
-        cat_cols = spark.createDataFrame(
+        cat_cols = local_frame(
+            spark,
             [
                 ("tdb.tr", "ts", "timestamptz", 0, False, 1),
                 ("tdb.tr", "id", "int", 1, False, 2),
@@ -701,7 +710,8 @@ class TestIcebergPartitionTransforms:
             + cat_parts,
             COLS_SCHEMA,
         )
-        cat_tables = spark.createDataFrame(
+        cat_tables = local_frame(
+            spark,
             [("tdb.tr", "EXTERNAL_TABLE", "ICEBERG", "s3://m", {}, "1")],
             TABLES_SCHEMA,
         )
@@ -819,7 +829,8 @@ class TestIcebergPartitionTransforms:
             )],
         )
         parsed = parse_ddl_corpus(corpus)
-        cat_cols = spark.createDataFrame(
+        cat_cols = local_frame(
+            spark,
             [
                 ("tdb.nw", "a", "array<int>", 0, False, 1),
                 ("tdb.nw", "b", "struct<x:decimal(10,2)>", 1, False, 2),
@@ -827,7 +838,8 @@ class TestIcebergPartitionTransforms:
             ],
             COLS_SCHEMA,
         )
-        cat_tables = spark.createDataFrame(
+        cat_tables = local_frame(
+            spark,
             [("tdb.nw", "EXTERNAL_TABLE", "ICEBERG", "s3://m", {}, "1")],
             TABLES_SCHEMA,
         )
