@@ -94,9 +94,9 @@ def run_alterator(
 
         if not validate:
             # ONE collect of the snapshot for every table's catalog schema
-            # and the field-id check below (not a collect per table — at a
-            # 500-table corpus that's 500 catalog round-trips
-            # re-materializing the snapshot plan 500 times).
+            # and the field-id check below. The snapshot is a local
+            # relation, so this reads the driver's own rows back and runs
+            # no Spark job.
             snapshot = cat_cols.collect()
             cat_schema: dict[str, list[dict[str, str]]] = {}
             for r in sorted(

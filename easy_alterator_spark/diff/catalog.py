@@ -11,8 +11,9 @@ B2/B3 DataFrames the diff engine consumes) and the version digest: two
 round trips per table, ``tableExists`` then ``DESCRIBE TABLE EXTENDED
 … AS JSON`` — the counterpart of the reference's one ``get_table``
 response (typed columns, partition columns, provider, Hive storage
-classes, properties as a map). The snapshot rows are gathered on the
-driver and handed to the JVM as local relations
+classes, properties as a map). The snapshot rows, Iceberg metadata.json
+rows included, are gathered in one driver pass and handed to the JVM
+as one local relation per frame
 (:func:`easy_alterator_spark.session.local_frame`), so the diff plans
 over them run in the JVM alone and a CLI run starts no Python worker.
 Catalog *writes* stay driver-side sequential (DDL is a metadata
@@ -125,25 +126,26 @@ def snapshot_catalog(spark: SparkSession, tables: list[str]) -> tuple[DataFrame,
     shape. ``tables`` are db-qualified names; missing tables are simply
     absent from the snapshot (the diff routes them as new).
 
-    Each table is read once through :func:`_describe` on the driver —
-    same as the reference's Glue round-trips — but the snapshot is
-    taken ONCE and the diff itself is a single distributed plan, so
-    catalog latency is O(tables) while diff cost is O(columns)
-    distributed. Both frames are local relations built over Arrow
-    (:func:`easy_alterator_spark.session.local_frame`): a job that
-    scans them starts no Python worker.
+    The snapshot is one driver pass: each table is read once through
+    :func:`_describe` — same as the reference's Glue round-trips — and
+    the diff itself is a single distributed plan, so catalog latency is
+    O(tables) while diff cost is O(columns) distributed. Each frame is
+    ONE local relation built over Arrow
+    (:func:`easy_alterator_spark.session.local_frame`): collecting it
+    runs no Spark job, and a job that scans it starts no Python worker.
 
     ICEBERG tables that expose a ``metadata_location`` property get
     their columns (with REAL field ids), partition spec, and properties
-    from the metadata.json — all locations are read in ONE Spark text
-    scan. Iceberg tables WITHOUT a metadata location fall back to the
-    describe's columns (field_id NULL); the apply path refuses
-    partition DDL for those (see cli.run_alterator).
+    from the metadata.json, opened in the same driver pass
+    (:func:`.iceberg_metadata.read_metadata_files`); a missing file
+    raises ``FileNotFoundError`` naming the table. Iceberg tables
+    WITHOUT a metadata location fall back to the describe's columns
+    (field_id NULL); the apply path refuses partition DDL for those
+    (see cli.run_alterator).
     """
     from .iceberg_metadata import read_metadata_files
 
     col_rows, tbl_rows = [], []
-    ice_locations: dict[str, str] = {}
     for table in tables:
         desc = _describe(spark, table)
         if desc is None:
@@ -151,7 +153,10 @@ def snapshot_catalog(spark: SparkSession, tables: list[str]) -> tuple[DataFrame,
         fmt, props = _table_format(desc), desc.get("table_properties", {})
         meta_loc = props.get("metadata_location")
         if fmt == "ICEBERG" and meta_loc:
-            ice_locations[table] = meta_loc
+            # metadata.json properties are authoritative for iceberg
+            # prop diff (reference plucks them from the same file)
+            meta_rows, props = read_metadata_files(spark, table, meta_loc)
+            col_rows.extend(meta_rows)
         else:
             parts = set(desc.get("partition_columns", []))
             pos = {False: 0, True: 0}
@@ -161,17 +166,7 @@ def snapshot_catalog(spark: SparkSession, tables: list[str]) -> tuple[DataFrame,
                 col_rows.append((table, c["name"].lower(), col_type, pos[is_part], is_part, None))
                 pos[is_part] += 1
         tbl_rows.append((table, "EXTERNAL_TABLE", fmt, meta_loc, props, "0"))
-    cols_df = local_frame(spark, col_rows, COLS_SCHEMA)
-    if ice_locations:
-        meta_cols, meta_props = read_metadata_files(spark, ice_locations)
-        cols_df = cols_df.unionByName(meta_cols)
-        # metadata.json properties are authoritative for iceberg prop
-        # diff (reference plucks them from the same file)
-        tbl_rows = [
-            (t, tt, fmt, loc, meta_props.get(t, props), ver)
-            for (t, tt, fmt, loc, props, ver) in tbl_rows
-        ]
-    return cols_df, local_frame(spark, tbl_rows, TABLES_SCHEMA)
+    return local_frame(spark, col_rows, COLS_SCHEMA), local_frame(spark, tbl_rows, TABLES_SCHEMA)
 
 
 # Injected boto3 Glue client (tests pass a moto client; production

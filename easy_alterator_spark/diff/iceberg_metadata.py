@@ -2,9 +2,9 @@
 
 The reference GETs the table's metadata.json from S3 and plucks the
 current schema, default partition spec, and properties
-(iceberg_schema_handler.py:131-151). Here the file is read through
-``spark.read.text(wholetext=True)`` — same code path for local files,
-S3, HDFS — and parsed driver-side (one small JSON per table), then
+(iceberg_schema_handler.py:131-151). Here the file is opened on the
+driver through Hadoop's FileSystem API — same code path for local
+files, S3, HDFS — and parsed there (one small JSON per table), then
 shaped into the FIXTURES.md B2/B3 snapshot rows the diff engine
 consumes. With the Iceberg Spark runtime on the classpath the same
 rows come from ``spark.table(t).schema`` + the ``.snapshots`` metadata
@@ -16,10 +16,7 @@ from __future__ import annotations
 import json
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..session import local_frame
-from .catalog import COLS_SCHEMA
+from pyspark.sql import SparkSession
 
 
 def parse_metadata(meta: dict[str, Any], table_name: str) -> tuple[list, dict]:
@@ -49,38 +46,20 @@ def parse_metadata(meta: dict[str, Any], table_name: str) -> tuple[list, dict]:
     return rows, props
 
 
-def _path_key(spark: SparkSession, path: str, is_uri: bool = False) -> str:
-    """One spelling per file: Hadoop's qualified, decoded path.
-
-    ``input_file_name`` returns an encoded URI (``file:///a%20b/v1.json``)
-    while a metadata_location is a plain path or URI (``/a b/v1.json``,
-    ``s3://b/v1.json``); both sides map to the same key."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(path) if is_uri else path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).makeQualified(p).toString()
-
-
 def read_metadata_files(
-    spark: SparkSession, locations: dict[str, str]
-) -> tuple[DataFrame, dict[str, dict[str, str]]]:
-    """Read {table_name: metadata.json path} -> (cat_cols DataFrame,
-    per-table properties). Paths may be local, s3://, hdfs:// — any
-    Hadoop-visible filesystem."""
-    if not locations:
-        return local_frame(spark, [], COLS_SCHEMA), {}
-    texts = (
-        spark.read.text(list(locations.values()), wholetext=True)
-        .selectExpr("input_file_name() as path", "value")
-        .collect()
-    )
-    contents = {_path_key(spark, r["path"], is_uri=True): r["value"] for r in texts}
-    rows: list = []
-    props: dict[str, dict[str, str]] = {}
-    for table, loc in locations.items():
-        text = contents.get(_path_key(spark, loc))
-        if text is None:
-            continue
-        t_rows, t_props = parse_metadata(json.loads(text), table)
-        rows.extend(t_rows)
-        props[table] = t_props
-    return local_frame(spark, rows, COLS_SCHEMA), props
+    spark: SparkSession, table: str, location: str
+) -> tuple[list, dict[str, str]]:
+    """Read one table's metadata.json on the driver -> (cat_cols rows,
+    properties). The location may be a local path or any Hadoop-visible
+    URI (file:, s3://, hdfs://)."""
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(location)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(path):
+        raise FileNotFoundError(f"{table}: metadata_location {location} does not exist")
+    stream = fs.open(path)
+    try:
+        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return parse_metadata(json.loads(text), table)

@@ -54,19 +54,8 @@ def _row_to_iceberg_entry(r) -> dict[str, Any]:
             "migration": str(bool(r["requires_migration"])),
         }
     updated: dict[str, Any] = {
-        "compatible": [
-            {"name": c["name"], "old_type": c["old_type"], "new_type": c["new_type"]}
-            for c in (r["compatible"] or [])
-        ],
-        "incompatible": [
-            {
-                "name": c["name"],
-                "old_type": c["old_type"],
-                "new_type": c["new_type"],
-                "backfilled_from": c["backfilled_from"],
-            }
-            for c in (r["incompatible"] or [])
-        ],
+        "compatible": _dicts(r["compatible"]),
+        "incompatible": _dicts(r["incompatible"]),
         "position_changes": position_moves(r["position_candidates"]),
     }
     if r["first_col"]:
@@ -76,36 +65,15 @@ def _row_to_iceberg_entry(r) -> dict[str, Any]:
     entry = {
         "table_name": r["full_name"],
         "columns": {
-            "new": [
-                {
-                    "name": c["name"],
-                    "type": c["type"],
-                    "after": c["after"],
-                    "first": c["first"],
-                }
-                for c in (r["new_cols"] or [])
-            ],
+            "new": _dicts(r["new_cols"]),
             "dropped": list(r["dropped"] or []),
-            "renamed": [
-                {"old_name": c["old_name"], "new_name": c["new_name"]}
-                for c in (r["renamed"] or [])
-            ],
+            "renamed": _dicts(r["renamed"]),
             "updated": updated,
         },
         "partition_columns": {
-            "new": [
-                {"field_id": p["field_id"], "name": p["name"], "expr": p["expr"]}
-                for p in (r["part_new"] or [])
-            ],
+            "new": _dicts(r["part_new"]),
             "dropped": list(r["part_dropped"] or []),
-            "replaced": [
-                {
-                    "old_name": p["old_name"],
-                    "new_name": p["new_name"],
-                    "expr": p["expr"],
-                }
-                for p in (r["part_replaced"] or [])
-            ],
+            "replaced": _dicts(r["part_replaced"]),
         },
         "tblprops": {
             "new": dict(r["props_new"] or {}),
@@ -117,8 +85,10 @@ def _row_to_iceberg_entry(r) -> dict[str, Any]:
     return clean(entry)
 
 
-def _nt(lst) -> list[dict[str, str]]:
-    return [{"Name": c["Name"], "Type": c["Type"]} for c in (lst or [])]
+def _dicts(structs) -> list[dict[str, Any]]:
+    """The diff's structs as report entries: each already carries the
+    report's keys, in the report's order."""
+    return [c.asDict() for c in structs or []]
 
 
 def build_report(outcomes: DataFrame, validate: bool = True, force: bool = False) -> dict[str, Any]:
@@ -164,17 +134,9 @@ def build_report(outcomes: DataFrame, validate: bool = True, force: bool = False
                                 }
                                 for c in (r["compatible"] or [])
                             ],
-                            "incompatible": [
-                                {
-                                    "Name": c["Name"],
-                                    "Type": c["Type"],
-                                    "updated_type": c["updated_type"],
-                                    "backfilled_from": c["backfilled_from"],
-                                }
-                                for c in (r["incompatible"] or [])
-                            ],
-                            "add": _nt(r["add"]),
-                            "delete": _nt(r["delete"]),
+                            "incompatible": _dicts(r["incompatible"]),
+                            "add": _dicts(r["add"]),
+                            "delete": _dicts(r["delete"]),
                         },
                     }
                 )
@@ -187,27 +149,13 @@ def build_report(outcomes: DataFrame, validate: bool = True, force: bool = False
         elif o == "non_parquet":
             non_parquet.append(r["table_name"])
         elif o == "format_changed":
-            fc = r["format_change"]
-            format_changed.append(
-                {
-                    "old_format": fc["old_format"],
-                    "new_format": fc["new_format"],
-                    "table_name": r["table_name"],
-                }
-            )
+            format_changed.append({**r["format_change"].asDict(), "table_name": r["table_name"]})
         elif o == "iceberg":
             ice = r["iceberg"]
             if ice is None:  # another file naming the table carries its diff
                 continue
             if r["format_change"] is not None:
-                fc = r["format_change"]
-                format_changed.append(
-                    {
-                        "old_format": fc["old_format"],
-                        "new_format": fc["new_format"],
-                        "table_name": r["table_name"],
-                    }
-                )
+                format_changed.append({**r["format_change"].asDict(), "table_name": r["table_name"]})
             if ice["error"]:
                 errored.append(
                     {
@@ -234,7 +182,7 @@ def build_report(outcomes: DataFrame, validate: bool = True, force: bool = False
                     "table_name": r["table_name"],
                     "previous_version": None,
                     "current_version": None,
-                    "details": {"add": _nt(r["add"]), "delete": _nt(r["delete"])},
+                    "details": {"add": _dicts(r["add"]), "delete": _dicts(r["delete"])},
                 }
             )
 

@@ -13,8 +13,8 @@
 - a Glue-backed session brackets with native Glue version ids.
 - a validate run over a small mixed corpus launches a fixed number of
   Spark jobs.
-- the live snapshot is a pair of local relations, so the diff over it
-  starts no Python worker.
+- each live snapshot frame is one local relation, so collecting it runs
+  no job and the diff over it starts no Python worker.
 """
 
 from __future__ import annotations
@@ -91,6 +91,19 @@ class TestIcebergSnapshot:
         assert tbl["format"] == "ICEBERG"
         # properties come from metadata.json (owner stripped)
         assert tbl["properties"] == {"write.merge.mode": "merge-on-read"}
+
+    def test_missing_metadata_file_names_the_table(self, spark, db, tmp_path):
+        from easy_alterator_spark.diff.catalog import snapshot_catalog
+
+        t = f"{db}.ice_gone"
+        meta = tmp_path / "gone" / "v1.metadata.json"
+        spark.sql(
+            f"CREATE TABLE {t} (col1 STRING) USING parquet "
+            f"TBLPROPERTIES ('metadata_location'='{meta}')"
+        )
+        with pytest.raises(FileNotFoundError) as err:
+            snapshot_catalog(spark, [t])
+        assert t in str(err.value) and str(meta) in str(err.value)
 
     def test_identical_ddl_yields_no_partition_churn(self, spark, ice_table, tmp_path):
         """The ADVICE scenario: with NULL field ids the partition field
@@ -359,10 +372,10 @@ class TestGlueBacked:
 class TestNoPythonWorker:
     def test_diff_over_live_snapshot_scans_no_python_rdd(self, spark, db, ice_table, tmp_path):
         """The DDL files are read by Spark and the snapshot rows cross to
-        the JVM over Arrow: both snapshot frames, the Iceberg table's
-        metadata.json rows included, plan as local table scans, and the
-        executed diff holds no Python RDD scan (``ExistingRDD``) and no
-        Python evaluation node."""
+        the JVM over Arrow: each snapshot frame, the Iceberg table's
+        metadata.json rows included, is one local relation that collects
+        with no Spark job, and the executed diff holds no Python RDD scan
+        (``ExistingRDD``) and no Python evaluation node."""
         from easy_alterator_spark.ddl.parser import parse_ddl_corpus, read_ddl_corpus
         from easy_alterator_spark.diff import hive_diff
         from easy_alterator_spark.diff.catalog import snapshot_catalog
@@ -379,7 +392,17 @@ class TestNoPythonWorker:
         )
         parsed = parse_ddl_corpus(read_ddl_corpus(spark, str(tmp_path)))
         cat_cols, cat_tables = snapshot_catalog(spark, [t, ice_table])
-        assert {r["table_name"] for r in cat_cols.collect()} == {t, ice_table}
+        sc = spark.sparkContext
+        group = "test-snapshot-collect-jobs"
+        sc.setJobGroup(group, "cat_cols.collect()")
+        try:
+            rows = cat_cols.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert {r["table_name"] for r in rows} == {t, ice_table}
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert "Union" not in executed_plan(cat_cols)
         for frame in (cat_cols, cat_tables):
             plan = executed_plan(frame)
             assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
@@ -393,8 +416,9 @@ class TestRunJobs:
     def test_validate_run_job_count(self, spark, db, ice_table, tmp_path):
         """run_alterator(validate=True) over a Hive add, an Iceberg column
         move and a new table: the parsed-table collect plus the one collect
-        of the one diff plan, counted through a job group, which host load
-        cannot move."""
+        of the one diff plan (the snapshot, Iceberg metadata.json included,
+        is read on the driver and runs none), counted through a job group,
+        which host load cannot move."""
         from easy_alterator_spark.cli import run_alterator
 
         t = f"{db}.jobs_hive"
@@ -430,4 +454,4 @@ class TestRunJobs:
         assert e["columns"]["updated"]["position_changes"] == [
             {"name": "day_rk", "after": "col1", "reason": "direct"}
         ]
-        assert len(jobs) == 9
+        assert len(jobs) == 8

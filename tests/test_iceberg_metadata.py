@@ -64,11 +64,13 @@ def test_read_via_spark_and_diff(spark, meta_file):
     from easy_alterator_spark.ddl.parser import corpus_from_rows, parse_ddl_corpus
     from easy_alterator_spark.diff import build_report, hive_diff
     from easy_alterator_spark.diff.iceberg_metadata import read_metadata_files
+    from easy_alterator_spark.session import local_frame
 
-    cat_cols, props = read_metadata_files(spark, {"db.t": meta_file})
-    assert cat_cols.count() == 5
+    rows, props = read_metadata_files(spark, "db.t", meta_file)
+    assert len(rows) == 5
+    cat_cols = local_frame(spark, rows, COLS_SCHEMA)
     cat_tables = spark.createDataFrame(
-        [("db.t", "EXTERNAL_TABLE", "ICEBERG", meta_file, props["db.t"], "1")],
+        [("db.t", "EXTERNAL_TABLE", "ICEBERG", meta_file, props, "1")],
         TABLES_SCHEMA,
     )
     # DDL renames col4 -> col5. NB the coherent timestamp pairing is
@@ -98,20 +100,10 @@ def test_read_via_spark_and_diff(spark, meta_file):
     assert "partition_columns" not in e
 
 
-def test_metadata_paths_match_exactly(spark):
-    """A location that is a suffix of another's path must not capture
-    the other table's file; both sides meet in one spelling."""
-    from easy_alterator_spark.diff.iceberg_metadata import _path_key
-
-    locations = {"db.a": "/x/metadata/v1.json", "db.b": "/data/x/metadata/v1.json"}
-    by_key = {_path_key(spark, loc): t for t, loc in locations.items()}
-    assert by_key[_path_key(spark, "file:///data/x/metadata/v1.json", is_uri=True)] == "db.b"
-    assert by_key[_path_key(spark, "file:///x/metadata/v1.json", is_uri=True)] == "db.a"
-
-
 def test_read_nested_and_encoded_locations(spark, tmp_path):
-    """Nested locations, a ``file:`` URI and a directory name that
-    ``input_file_name`` percent-encodes each read their own file."""
+    """Nested locations (one a path suffix of another), a ``file:`` URI
+    and a directory name that a URI percent-encodes each read their own
+    file."""
     from easy_alterator_spark.diff.iceberg_metadata import read_metadata_files
 
     files = {
@@ -130,10 +122,10 @@ def test_read_nested_and_encoded_locations(spark, tmp_path):
         path.write_text(json.dumps(meta))
     locations = {t: str(p) for t, p in files.items()}
     locations["db.b"] = "file://" + locations["db.b"]
-    cat_cols, props = read_metadata_files(spark, locations)
-    assert sorted((r["table_name"], r["name"]) for r in cat_cols.collect()) == [
+    read = {t: read_metadata_files(spark, t, loc) for t, loc in locations.items()}
+    assert sorted((r[0], r[1]) for rows, _ in read.values() for r in rows) == [
         ("db.a", "f_a"),
         ("db.b", "f_b"),
         ("db.c", "f_c"),
     ]
-    assert set(props) == {"db.a", "db.b", "db.c"}
+    assert all(props == {} for _, props in read.values())

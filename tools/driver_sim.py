@@ -19,8 +19,9 @@ import hashlib
 import json
 import sys
 import traceback
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tests.util import canon_rows, duck_result, spark_result  # noqa: E402
 

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import random
 import sys
+from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
@@ -54,6 +55,8 @@ DOCS_BASE = 5000
 VECS_BASE = 2000
 DIM = 64
 ROW_GROUP = 5000
+# the corpora land in the repo's own .scale/, where scale_rehearsal.py reads them
+SCALE_DIR = str(Path(__file__).resolve().parents[1] / ".scale")
 
 
 def gen_documents(n: int, rng: random.Random, entropy: str = "low"):
@@ -175,7 +178,7 @@ def gen_events(n: int, n_users: int, seed: int, hot_users: int = 0):
     )
 
 
-def main(out_root: str = "/root/repo/.scale", mults=(1, 3, 10)) -> None:
+def main(out_root: str = SCALE_DIR, mults=(1, 3, 10)) -> None:
     import os
 
     # genu = hot-user regime: 5 bot users absorb 25% of events with
@@ -219,7 +222,7 @@ def main(out_root: str = "/root/repo/.scale", mults=(1, 3, 10)) -> None:
 
 if __name__ == "__main__":
     main(
-        sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale",
+        sys.argv[1] if len(sys.argv) > 1 else SCALE_DIR,
         tuple(int(m) for m in sys.argv[2].split(","))
         if len(sys.argv) > 2
         else (1, 3, 10),

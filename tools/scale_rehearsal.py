@@ -16,8 +16,10 @@ from __future__ import annotations
 import math
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from easy_alterator_spark.queries import QUERIES, load_all
 from easy_alterator_spark.session import get_spark
@@ -85,7 +87,7 @@ def main(
     spark = get_spark("scale-rehearsal", master="local[32]")
     results: dict[str, dict[int, float]] = {}
     for mult, *_ in scales:
-        sf_dir = f"/root/repo/.scale/{prefix}{mult}"
+        sf_dir = f"{REPO}/.scale/{prefix}{mult}"
         for name, _kind in families:
             q = QUERIES[name]
             q(spark, sf_dir).collect()  # warm (plan + page cache)
