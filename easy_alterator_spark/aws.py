@@ -10,7 +10,7 @@ and off EC2, each step gated and fail-soft:
 3. EC2 IMDSv2 instance-identity document (token + document fetch,
    sub-second timeouts)
 4. the provided default ("" keeps the placeholder literal-replaced
-   with nothing, matching parser.normalize_corpus's default)
+   with nothing, matching parser.corpus_from_rows's default)
 
 The result is cached per process — resolution runs at most once no
 matter how many corpora are parsed.

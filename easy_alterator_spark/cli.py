@@ -2,12 +2,11 @@
 (easy_alterator.py:20-105): -p/--path, -c/--config, -cp/--key_for_path,
 -fs/-fp file filters, --validate, --force, --sync with -src/-tgt/-pcheck.
 
-Pipeline: discover DDL files (driver) -> read + parse the whole corpus
-(one Spark plan) -> snapshot the catalog for the referenced tables ->
-one diff plan, each file routed and diffed in its row, each Iceberg
-table's diff carried on one of its files -> report (one collect,
-Iceberg column moves ordered on the driver); apply rendered ALTERs
-unless --validate.
+Pipeline, all on the driver with no Spark job: discover and read the
+DDL files -> parse the corpus (one local relation) -> snapshot the
+catalog for the referenced tables -> diff each file in its row, each
+Iceberg table's diff carried on one of its files -> report (one
+collect); apply rendered ALTERs unless --validate.
 """
 
 from __future__ import annotations
@@ -69,106 +68,97 @@ def run_alterator(
         raise FileNotFoundError(f"no DDL files matched under {paths}")
     if aws_account_id is None:
         aws_account_id = resolve_aws_account_id()
-    parsed = parse_ddl_corpus(
-        read_ddl_corpus(spark, files, aws_account_id=aws_account_id)
-    ).cache()
-    # cached for the run only: a long-lived session must not carry one
-    # run's parse into the next
-    try:
-        tables = [
+    parsed = parse_ddl_corpus(read_ddl_corpus(spark, files, aws_account_id=aws_account_id))
+    # the corpus is a local relation: this collect runs no Spark job
+    names = parsed.select("table_name").collect()
+    tables = sorted({r["table_name"] for r in names if r["table_name"]})
+    cat_cols, cat_tables = snapshot_catalog(spark, tables)
+    outcomes = hive_diff(parsed, cat_cols, cat_tables, force=force)
+    report = build_report(outcomes, validate=validate, force=force)
+    # S6 version bracket: record each to-be-altered table's catalog
+    # version BEFORE apply (reference brackets Glue update_table with
+    # two get_table_versions calls, alterator.py:434-440). Validate
+    # mode reports previous == current.
+    for e in report["success_tables"]:
+        v = table_version(spark, e["table_name"])
+        e["previous_version"] = v
+        e["current_version"] = v
+
+    if not validate:
+        # ONE collect of the snapshot for every table's catalog schema
+        # and the field-id check below. The snapshot is a local
+        # relation, so this reads the driver's own rows back and runs
+        # no Spark job.
+        snapshot = cat_cols.collect()
+        cat_schema: dict[str, list[dict[str, str]]] = {}
+        for r in sorted(
+            (r for r in snapshot if not r["is_partition"]),
+            key=lambda r: (r["table_name"], r["position"]),
+        ):
+            cat_schema.setdefault(r["table_name"], []).append(
+                {"Name": r["name"], "Type": r["type"]}
+            )
+        # live-iceberg tables whose snapshot has no real field ids
+        # (no metadata.json available): partition DDL would be built on
+        # NULL join keys — refuse it rather than emit spurious
+        # ADD/DROP PARTITION FIELD.
+        null_fid = {
             r["table_name"]
-            for r in parsed.select("table_name").distinct().collect()
-            if r["table_name"]
-        ]
-        cat_cols, cat_tables = snapshot_catalog(spark, tables)
-        outcomes = hive_diff(parsed, cat_cols, cat_tables, force=force)
-        report = build_report(outcomes, validate=validate, force=force)
-        # S6 version bracket: record each to-be-altered table's catalog
-        # version BEFORE apply (reference brackets Glue update_table with
-        # two get_table_versions calls, alterator.py:434-440). Validate
-        # mode reports previous == current.
+            for r in snapshot
+            if r["is_partition"] and r["field_id"] is None
+        }
+
+        per_table: list[tuple[str, list[str]]] = []
+        apply_errors: dict[str, str] = {}
         for e in report["success_tables"]:
-            v = table_version(spark, e["table_name"])
-            e["previous_version"] = v
-            e["current_version"] = v
-
-        if not validate:
-            # ONE collect of the snapshot for every table's catalog schema
-            # and the field-id check below. The snapshot is a local
-            # relation, so this reads the driver's own rows back and runs
-            # no Spark job.
-            snapshot = cat_cols.collect()
-            cat_schema: dict[str, list[dict[str, str]]] = {}
-            for r in sorted(
-                (r for r in snapshot if not r["is_partition"]),
-                key=lambda r: (r["table_name"], r["position"]),
-            ):
-                cat_schema.setdefault(r["table_name"], []).append(
-                    {"Name": r["name"], "Type": r["type"]}
-                )
-            # live-iceberg tables whose snapshot has no real field ids
-            # (no metadata.json available): partition DDL would be built on
-            # NULL join keys — refuse it rather than emit spurious
-            # ADD/DROP PARTITION FIELD.
-            null_fid = {
-                r["table_name"]
-                for r in snapshot
-                if r["is_partition"] and r["field_id"] is None
-            }
-
-            per_table: list[tuple[str, list[str]]] = []
-            apply_errors: dict[str, str] = {}
-            for e in report["success_tables"]:
-                per_table.append(
-                    (
+            per_table.append(
+                (
+                    e["table_name"],
+                    hive_alter_statements(
                         e["table_name"],
-                        hive_alter_statements(
-                            e["table_name"],
-                            e["details"]["add"],
-                            e["details"]["delete"],
-                            catalog_schema=cat_schema.get(e["table_name"]),
-                        ),
-                    )
+                        e["details"]["add"],
+                        e["details"]["delete"],
+                        catalog_schema=cat_schema.get(e["table_name"]),
+                    ),
                 )
-            for e in report["iceberg_tables"]:
-                if "sequenceMismatch" in e:
-                    continue
-                if e.get("migration") == "True":
-                    # the catalog table is still Hive — Iceberg-only DDL
-                    # (partition fields, column moves, renames) would fail
-                    # on it. Reference treats migration tables as
-                    # report-only (alterator.py migration path).
-                    continue
-                entry = {**e, "table_name": e["table_name"].split(".", 1)[-1]}
-                if e["table_name"] in null_fid and e.get("partition_columns"):
-                    apply_errors[e["table_name"]] = (
-                        "partition DDL skipped: catalog snapshot has no "
-                        "iceberg field ids (no metadata_location)"
-                    )
-                    entry = {k: v for k, v in entry.items() if k != "partition_columns"}
-                per_table.append((e["table_name"], iceberg_alter_statements(entry)))
+            )
+        for e in report["iceberg_tables"]:
+            if "sequenceMismatch" in e:
+                continue
+            if e.get("migration") == "True":
+                # the catalog table is still Hive — Iceberg-only DDL
+                # (partition fields, column moves, renames) would fail
+                # on it. Reference treats migration tables as
+                # report-only (alterator.py migration path).
+                continue
+            entry = {**e, "table_name": e["table_name"].split(".", 1)[-1]}
+            if e["table_name"] in null_fid and e.get("partition_columns"):
+                apply_errors[e["table_name"]] = (
+                    "partition DDL skipped: catalog snapshot has no "
+                    "iceberg field ids (no metadata_location)"
+                )
+                entry = {k: v for k, v in entry.items() if k != "partition_columns"}
+            per_table.append((e["table_name"], iceberg_alter_statements(entry)))
 
-            # per-table application with error collection — one failing
-            # table must not abort the remaining tables mid-run (earlier
-            # tables are already altered; DDL has no transaction to roll
-            # back into).
-            applied: list[str] = []
-            for name, stmts in per_table:
-                try:
-                    apply_statements(spark, stmts)
-                    applied += stmts
-                except Exception as exc:  # noqa: BLE001 — collected per table
-                    apply_errors[name] = str(exc)
-            report["applied_statements"] = applied
-            if apply_errors:
-                report["apply_errors"] = apply_errors
-            # close the S6 bracket: re-fetch versions for altered tables
-            for e in report["success_tables"]:
-                if e["table_name"] not in apply_errors:
-                    e["current_version"] = table_version(spark, e["table_name"])
-        return report
-    finally:
-        parsed.unpersist(blocking=False)
+        # per-table application with error collection — one failing
+        # table must not abort the remaining tables mid-run (earlier
+        # tables are already altered; DDL has no transaction to roll
+        # back into).
+        applied: list[str] = []
+        for name, stmts in per_table:
+            try:
+                apply_statements(spark, stmts)
+                applied += stmts
+            except Exception as exc:  # noqa: BLE001 — collected per table
+                apply_errors[name] = str(exc)
+        report["applied_statements"] = applied
+        if apply_errors:
+            report["apply_errors"] = apply_errors
+        # close the S6 bracket: re-fetch versions for altered tables
+        for e in report["success_tables"]:
+            if e["table_name"] not in apply_errors:
+                e["current_version"] = table_version(spark, e["table_name"])
+    return report
 
 
 def write_report(spark: SparkSession, report: dict, uri: str) -> None:
@@ -180,10 +170,10 @@ def write_report(spark: SparkSession, report: dict, uri: str) -> None:
     s3a://, hdfs://, or anything else the session's Hadoop conf knows —
     no boto3 dependency and no driver-side temp files.
     """
+    from .files import hadoop_path
+
     data = json.dumps(report, indent=2, default=str)
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(uri)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = hadoop_path(spark, uri)
     out = fs.create(jpath, True)  # overwrite=True, reference semantics
     try:
         out.write(bytearray(data.encode("utf-8")))

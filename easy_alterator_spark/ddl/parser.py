@@ -1,12 +1,12 @@
 """DDL-corpus parser: regex-as-projection over CREATE TABLE text.
 
 The reference parses one file at a time with ``re.findall`` inside a
-Python loop (alterator.py:518). Here the whole corpus is one DataFrame
-— ``spark.read.text(wholetext=True)`` + ``input_file_name`` — and every
-extraction is a Column expression (``regexp_extract_all`` + ``transform``
-+ ``posexplode``), so parsing 458 or 458k DDL files is the same plan
-with no driver loop. Column order — load-bearing for partition checks
-and Iceberg positioning — is carried as an explicit ``pos`` field
+Python loop (alterator.py:518). Here the corpus is one local relation
+of (file_path, ddl), read on the driver, and every extraction is a
+Column expression (``regexp_extract_all`` + ``transform``), which
+Catalyst evaluates on the driver as it optimizes the plan: O(files),
+no Spark job. Column order — load-bearing for partition checks and
+Iceberg positioning — is carried as an explicit ``pos`` field
 (SURVEY.md §7 watch list: Spark rows are unordered).
 
 Directive comments (``-- renamed_from: x``, ``-- after: x``,
@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..files import read_file
 from ..session import local_frame
 
 # Type token. The reference's column regex only matches scalar types
@@ -72,29 +73,21 @@ def _nullify(c: Column) -> Column:
     return F.when(c != "", c)
 
 
-def read_ddl_corpus(
-    spark: SparkSession, paths: list[str] | str, aws_account_id: str = ""
-) -> DataFrame:
-    """(file_path, ddl) with the reference's read normalization:
-    lowercase, trim, {aws_account_id} interpolation."""
-    raw = spark.read.text(paths, wholetext=True).select(
-        F.input_file_name().alias("file_path"), F.col("value").alias("ddl")
-    )
-    return normalize_corpus(raw, aws_account_id)
+def read_ddl_corpus(spark: SparkSession, paths: list[str], aws_account_id: str = "") -> DataFrame:
+    """(file_path, ddl), one row per file, an empty one included, read
+    on the driver (:func:`easy_alterator_spark.files.read_file`), then
+    normalized by :func:`corpus_from_rows`."""
+    return corpus_from_rows(spark, [read_file(spark, p) for p in paths], aws_account_id)
 
 
 def corpus_from_rows(
     spark: SparkSession, rows: list[tuple[str, str]], aws_account_id: str = ""
 ) -> DataFrame:
-    """Corpus from in-memory (file_path, ddl_text) rows (tests/fixtures),
-    as a local relation built over Arrow
-    (:func:`easy_alterator_spark.session.local_frame`), normalized as
-    :func:`read_ddl_corpus` normalizes files."""
+    """Corpus from (file_path, ddl_text) rows, as a local relation
+    (:func:`easy_alterator_spark.session.local_frame`), with the
+    reference's read normalization: lowercase, trim, {aws_account_id}
+    interpolation."""
     raw = local_frame(spark, rows, "file_path string, ddl string")
-    return normalize_corpus(raw, aws_account_id)
-
-
-def normalize_corpus(raw: DataFrame, aws_account_id: str = "") -> DataFrame:
     # Python str.strip() removes ALL whitespace; Spark trim() only
     # removes spaces — use a regex trim so `\n        CREATE ...` still
     # registers as a create statement.

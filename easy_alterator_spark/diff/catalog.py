@@ -127,9 +127,9 @@ def snapshot_catalog(spark: SparkSession, tables: list[str]) -> tuple[DataFrame,
     absent from the snapshot (the diff routes them as new).
 
     The snapshot is one driver pass: each table is read once through
-    :func:`_describe` — same as the reference's Glue round-trips — and
-    the diff itself is a single distributed plan, so catalog latency is
-    O(tables) while diff cost is O(columns) distributed. Each frame is
+    :func:`_describe` — same as the reference's Glue round-trips — so a
+    run is bound by these O(tables) round trips: the diff over the
+    snapshot is O(files) driver work with no Spark job. Each frame is
     ONE local relation built over Arrow
     (:func:`easy_alterator_spark.session.local_frame`): collecting it
     runs no Spark job, and a job that scans it starts no Python worker.

@@ -1,11 +1,11 @@
 """Hive-path schema diff: each DDL file is diffed inside its own row.
 
 The reference diffs one file at a time with small pandas merges
-(alterator.py:482-739). Here the catalog snapshot is folded into one
-sorted array per table (:func:`with_catalog`, one ``groupBy``) and
-broadcast-joined onto the parsed corpus, whose rows already carry the
-DDL's ``columns`` and ``hive_partitions`` arrays. Each reference merge
-is then a row-local higher-order expression over two small arrays:
+(alterator.py:482-739). Here each parsed DDL row, which carries the
+DDL's ``columns`` and ``hive_partitions`` arrays, gets its table's catalog
+columns as one sorted array on the driver (:func:`_attach_catalog`). Each
+reference merge is then a row-local higher-order expression over two
+small arrays, which Catalyst evaluates on the driver: no Spark job.
 
 - routing/dispatch        -> one ``when/otherwise`` routing column
 - schema diff (J1-J4)     -> :func:`outer_pairs` on name: DDL columns vs
@@ -41,26 +41,41 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.types import StructType
 
 from ..ddl import types as TY
+from ..session import local_frame
 
 _CAT_T = "array<struct<is_partition:boolean,position:int,name:string,type:string,field_id:int>>"
+_ATTACHED = (
+    f"cat {_CAT_T}, cat_format string, cat_exists boolean, cat_props map<string,string>, ice_last string"
+)
 
 
-def with_catalog(df: DataFrame, cat_cols: DataFrame) -> DataFrame:
-    """``df`` plus ``cat``: its table's catalog columns as one array
-    sorted by (is_partition, position), so data columns come first in
-    order, then partition columns in order; empty when the snapshot has
-    no rows for the table."""
-    cat = cat_cols.groupBy("table_name").agg(
-        F.array_sort(
-            F.collect_list(F.struct("is_partition", "position", "name", "type", "field_id"))
-        ).alias("cat")
-    )
-    return df.join(F.broadcast(cat), "table_name", "left").withColumn(
-        "cat", F.coalesce("cat", F.array().cast(_CAT_T))
-    )
+def _attach_catalog(parsed: DataFrame, cat_cols: DataFrame, cat_tables: DataFrame) -> DataFrame:
+    """``parsed`` plus, per file, its table's catalog columns as ``cat``
+    (data columns in order, then partition columns; empty if none), its
+    catalog table row as ``cat_format``/``cat_exists``/``cat_props`` (NULL
+    if absent), and as ``ice_last`` the lexically last Iceberg CREATE
+    file naming its table, which carries the table's Iceberg diff. The
+    inputs are local relations at every caller: collecting runs no job."""
+    cols: dict[str, list] = {}
+    entry = F.struct("is_partition", "position", "name", "type", "field_id")
+    for t, c in cat_cols.select("table_name", entry).collect():
+        cols.setdefault(t, []).append(c)
+    tables = {r["table_name"]: (r["format"], True, r["properties"]) for r in cat_tables.collect()}
+    rows = parsed.collect()
+    ice_last: dict[str, str] = {}
+    for r in rows:
+        if r["table_name"] is not None and r["is_create"] and r["hql_format"] == "iceberg":
+            ice_last[r["table_name"]] = max(ice_last.get(r["table_name"], ""), r["file_path"])
+    attached = []
+    for r in rows:
+        t = r["table_name"]
+        attached.append((*r, cols.get(t, []), *tables.get(t, (None, None, None)), ice_last.get(t)))
+    schema = StructType(parsed.schema.fields + StructType.fromDDL(_ATTACHED).fields)
+    # the order is Spark's struct order, as the diff compares it
+    return local_frame(parsed.sparkSession, attached, schema).withColumn("cat", F.array_sort("cat"))
 
 
 def unmatched(xs: Column, ys: Column, match: Callable[[Column, Column], Column]) -> Column:
@@ -226,8 +241,8 @@ def hive_diff(
     alterator.py:556-570). ``iceberg`` is the table's Iceberg diff
     (:func:`.iceberg.with_iceberg`) on the one file that carries it,
     the lexically last Iceberg CREATE file naming the table, and NULL
-    on every other row; so this one plan, collected once, holds the
-    whole report.
+    on every other row. The inputs are collected and the output is one
+    local relation: collected once, it holds the whole report.
 
     The diff is keyed by file, not table: two DDL files naming the same
     table (e.g. a stray non-CREATE statement) each get their own row and
@@ -235,21 +250,12 @@ def hive_diff(
     """
     from .iceberg import with_iceberg  # built on this module's helpers
 
-    cat_t = cat_tables.select(
-        "table_name",
-        F.col("format").alias("cat_format"),
-        F.lit(True).alias("cat_exists"),
-        F.col("properties").alias("cat_props"),
-    )
     # the Iceberg route: a named Iceberg CREATE file
     routed = F.col("table_name").isNotNull() & F.col("is_create") & (F.col("hql_format") == "iceberg")
-    # the Iceberg diff is keyed by table: of several routed files naming
-    # one table, the lexically last carries it (the Hive path is
-    # file-keyed and reports each)
-    last = F.max(F.when(routed, F.col("file_path"))).over(Window.partitionBy("table_name"))
-    keyed = parsed.withColumn("ice_last", last)
+    # the Iceberg diff is keyed by table, on its ice_last file (the Hive
+    # path is file-keyed and reports each)
     base = with_iceberg(
-        with_catalog(keyed.join(F.broadcast(cat_t), "table_name", "left"), cat_cols),
+        _attach_catalog(parsed, cat_cols, cat_tables),
         routed & (F.col("file_path") == F.col("ice_last")),
     )
     # NB: commented-out columns are NOT filtered here — the reference's

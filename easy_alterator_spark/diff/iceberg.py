@@ -1,10 +1,10 @@
 """Iceberg-path schema diff: each table is diffed inside its own row.
 
 Re-expresses the reference handler (iceberg_schema_handler.py:241-576)
-the way :mod:`.hive` does: the catalog snapshot is one sorted array per
-table (:func:`.hive.with_catalog`), broadcast-joined with the catalog
-table row onto the parsed DDL, and every merge of the reference is a
-row-local higher-order expression:
+the way :mod:`.hive` does: each parsed DDL row carries its table's
+catalog columns as one sorted array and its catalog table row, both
+attached on the driver (:func:`.hive._attach_catalog`), and every merge
+of the reference is a row-local higher-order expression:
 
 - J6 inner join on name        -> ``common``: each DDL column paired
                                   with its same-named catalog columns
@@ -99,7 +99,7 @@ def with_iceberg(base: DataFrame, keep: Column) -> DataFrame:
 
     ``base`` is a :func:`.hive.hive_diff` row: one parsed DDL file, its
     catalog table (``cat_format``, ``cat_exists``, ``cat_props``) and
-    its catalog columns (``cat``, :func:`.hive.with_catalog`).
+    its catalog columns (``cat``), from :func:`.hive._attach_catalog`.
     """
     rm = F.col("cat_format") != "ICEBERG"
     in_cat = F.coalesce("cat_exists", F.lit(False))

@@ -18,6 +18,8 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
+from ..files import read_file
+
 
 def parse_metadata(meta: dict[str, Any], table_name: str) -> tuple[list, dict]:
     """metadata dict -> (cat_cols rows, properties).
@@ -52,14 +54,8 @@ def read_metadata_files(
     """Read one table's metadata.json on the driver -> (cat_cols rows,
     properties). The location may be a local path or any Hadoop-visible
     URI (file:, s3://, hdfs://)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(location)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        raise FileNotFoundError(f"{table}: metadata_location {location} does not exist")
-    stream = fs.open(path)
     try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
+        _, text = read_file(spark, location)
+    except FileNotFoundError:
+        raise FileNotFoundError(f"{table}: metadata_location {location} does not exist") from None
     return parse_metadata(json.loads(text), table)

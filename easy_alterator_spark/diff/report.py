@@ -1,7 +1,7 @@
 """Run-report assembly (A1): outcome rows -> the reference's JSON shape.
 
-The heavy lifting (routing, joins, classification) happens in Spark;
-this module collects the outcome rows of the one diff plan
+The heavy lifting (routing, diffing, classification) happens in Spark
+expressions; this module collects the outcome rows of the one diff
 (:func:`easy_alterator_spark.diff.hive.hive_diff`) in one action — tiny
 by construction, one row per DDL file, each Iceberg table's diff riding
 on one of its rows — and shapes the nested report exactly like the

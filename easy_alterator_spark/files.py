@@ -1,11 +1,10 @@
-"""DDL file discovery + YAML config (S1/S4 in SURVEY.md §2.1).
+"""DDL file discovery and reads + YAML config (S1/S3/S4 in SURVEY.md §2.1).
 
-Driver-side by design: listing a few hundred DDL paths is metadata
-work; the *contents* are read distributed via ``spark.read.text``
-(ddl/parser.read_ddl_corpus). Mirrors the reference's filter rules
-(file_utils.py:48-128): directories expand to prefix/suffix-filtered
-entries, explicit file paths pass through, and a table allowlist keeps
-only ``{prefix}{table}.{suffix}`` names.
+Driver-side by design: listing and reading a few hundred small files is
+metadata work, O(files) round trips and no Spark job. Mirrors the
+reference's filter rules (file_utils.py:48-128): directories expand to
+prefix/suffix-filtered entries, explicit file paths pass through, and a
+table allowlist keeps only ``{prefix}{table}.{suffix}`` names.
 """
 
 from __future__ import annotations
@@ -33,23 +32,36 @@ def _filter_names(names: list[str], prefix: str, suffix: str, table_names) -> li
     return names
 
 
+def hadoop_path(spark, location: str):
+    """(FileSystem, Path) of ``location``: s3a://, hdfs://, file://, ..."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(location)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
+
+
 def _hadoop_expand(spark, path: str, prefix: str, suffix: str, table_names) -> list[str]:
-    """Directory expansion for scheme'd paths via Hadoop FS — the same
-    code path serves s3://, s3a://, hdfs://, file://."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    try:
-        status = fs.getFileStatus(jpath)
-    except Exception:
-        # not found -> pass through like an explicit file path; the
-        # distributed read will surface the real error
-        return [path]
-    if not status.isDirectory():
+    """Directory expansion for scheme'd paths via Hadoop FS."""
+    fs, jpath = hadoop_path(spark, path)
+    if not fs.isDirectory(jpath):
+        # a file passes through, and so does a missing path:
+        # read_file raises FileNotFoundError naming it
         return [path]
     names = [s.getPath().getName() for s in fs.listStatus(jpath) if s.isFile()]
     base = path.rstrip("/")
     return [f"{base}/{n}" for n in _filter_names(names, prefix, suffix, table_names)]
+
+
+def read_file(spark, location: str) -> tuple[str, str]:
+    """(qualified URI such as ``file:///d%20ir/x.hql``, UTF-8 text) of one
+    file; ``FileNotFoundError`` naming ``location`` if there is none."""
+    fs, path = hadoop_path(spark, location)
+    if not fs.isFile(path):
+        raise FileNotFoundError(f"no file at {location}")
+    stream = fs.open(path)
+    try:
+        text = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return fs.makeQualified(path).toUri().toString(), text
 
 
 def filter_ddl_files(

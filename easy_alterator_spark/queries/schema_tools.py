@@ -130,7 +130,7 @@ def _bulk_fixture(spark, n_tables: int = 500):
     5th table adds a column, every 7th retypes (incompatible), every
     11th widens (compatible), every 13th drops; the rest are identical.
     This is the schema-diff THROUGHPUT surface (BASELINE.md: >=458
-    tables/run) — one Spark plan, no per-table loop, no catalog calls
+    tables/run) — one projection, no per-table loop, no catalog calls
     from executors. The frames are built and parsed anew on each call:
     no state carries one timed run into the next."""
     ddls, cat_cols, cat_tables = [], [], []
@@ -166,11 +166,11 @@ def _bulk_fixture(spark, n_tables: int = 500):
 
 @query("ddl_diff_bulk")  # throughput surface; rows-only check
 def ddl_diff_bulk(spark, sf_dir):
-    """Diff 500 tables in one corpus-wide plan; outcome histogram.
+    """Diff 500 tables as one corpus-wide projection; outcome histogram.
 
     The reference analyzes 458 tables with >=458 sequential catalog
-    round-trips (README.md:107, alterator.py:518); here the same run
-    is one distributed plan over the whole corpus.
+    round-trips (README.md:107, alterator.py:518); here the diff is one
+    projection evaluated on the driver; only the ``groupBy`` is a job.
     """
     from ..diff import hive_diff
 

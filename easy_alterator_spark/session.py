@@ -160,8 +160,8 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
-    """A frame of driver-held ``rows`` typed by the DDL ``schema``.
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str | StructType) -> DataFrame:
+    """A frame of driver-held ``rows`` typed by ``schema`` (DDL or struct).
 
     The rows cross to the JVM as one Arrow table and become a
     ``LocalRelation``: jobs that scan it run in the JVM alone. The list
@@ -172,7 +172,7 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    struct = StructType.fromDDL(schema)
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
     table = pa.Table.from_pylist(
         [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
     )

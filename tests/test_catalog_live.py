@@ -11,10 +11,12 @@
 - every table is read with one existence check plus one JSON describe,
   whose types and properties come back whole.
 - a Glue-backed session brackets with native Glue version ids.
-- a validate run over a small mixed corpus launches a fixed number of
-  Spark jobs.
+- a validate run over a small mixed corpus launches no Spark job.
 - each live snapshot frame is one local relation, so collecting it runs
   no job and the diff over it starts no Python worker.
+- the DDL files are read on the driver: an empty file is reported, a
+  missing one raises a named error, and ``file_path`` keeps the URI
+  form ``input_file_name`` gave.
 """
 
 from __future__ import annotations
@@ -371,14 +373,15 @@ class TestGlueBacked:
 
 class TestNoPythonWorker:
     def test_diff_over_live_snapshot_scans_no_python_rdd(self, spark, db, ice_table, tmp_path):
-        """The DDL files are read by Spark and the snapshot rows cross to
-        the JVM over Arrow: each snapshot frame, the Iceberg table's
-        metadata.json rows included, is one local relation that collects
-        with no Spark job, and the executed diff holds no Python RDD scan
-        (``ExistingRDD``) and no Python evaluation node."""
+        """The DDL files and the snapshot rows cross to the JVM over
+        Arrow: each snapshot frame, the Iceberg table's metadata.json rows
+        included, is one local relation that collects with no Spark job,
+        and the executed diff holds no Python RDD scan (``ExistingRDD``)
+        and no Python evaluation node."""
         from easy_alterator_spark.ddl.parser import parse_ddl_corpus, read_ddl_corpus
         from easy_alterator_spark.diff import hive_diff
         from easy_alterator_spark.diff.catalog import snapshot_catalog
+        from easy_alterator_spark.files import filter_ddl_files
         from easy_alterator_spark.plans.audit import executed_plan
 
         t = f"{db}.nopy_hive"
@@ -390,7 +393,7 @@ class TestNoPythonWorker:
             f"CREATE TABLE `{ice_table}` (`col1` string, `amount` bigint, `day_rk` date)"
             " USING iceberg PARTITIONED BY (`day_rk`);"
         )
-        parsed = parse_ddl_corpus(read_ddl_corpus(spark, str(tmp_path)))
+        parsed = parse_ddl_corpus(read_ddl_corpus(spark, filter_ddl_files([str(tmp_path)])))
         cat_cols, cat_tables = snapshot_catalog(spark, [t, ice_table])
         sc = spark.sparkContext
         group = "test-snapshot-collect-jobs"
@@ -415,10 +418,11 @@ class TestNoPythonWorker:
 class TestRunJobs:
     def test_validate_run_job_count(self, spark, db, ice_table, tmp_path):
         """run_alterator(validate=True) over a Hive add, an Iceberg column
-        move and a new table: the parsed-table collect plus the one collect
-        of the one diff plan (the snapshot, Iceberg metadata.json included,
-        is read on the driver and runs none), counted through a job group,
-        which host load cannot move."""
+        move and a new table runs no Spark job: the DDL files and the
+        snapshot, Iceberg metadata.json included, are read on the driver,
+        and the optimizer evaluates the parse and the diff over those
+        local rows. Counted through a job group, which host load cannot
+        move."""
         from easy_alterator_spark.cli import run_alterator
 
         t = f"{db}.jobs_hive"
@@ -454,4 +458,57 @@ class TestRunJobs:
         assert e["columns"]["updated"]["position_changes"] == [
             {"name": "day_rk", "after": "col1", "reason": "direct"}
         ]
-        assert len(jobs) == 8
+        assert len(jobs) == 0
+
+
+class TestDdlRead:
+    def test_empty_file_is_reported_not_dropped(self, spark, db, tmp_path):
+        """A 0-byte DDL file has no table name: it lands in
+        ``skipped_tables`` as ``TableNameNotExtracted`` with its file
+        name, as the reference skips it (alterator.py:523-536)."""
+        from easy_alterator_spark.cli import run_alterator
+
+        (tmp_path / "empty.hql").write_text("")
+        (tmp_path / "new.hql").write_text(
+            f"CREATE EXTERNAL TABLE `{db}.read_new`(`id` int) STORED AS PARQUET;"
+        )
+        report = run_alterator(spark, [str(tmp_path)], validate=True)
+        assert report["new_tables"] == [f"{db}.read_new"]
+        assert report["skipped_tables"] == [
+            {
+                "table_name": "",
+                "filename": f"file://{tmp_path}/empty.hql",
+                "reason": "TableNameNotExtracted",
+            }
+        ]
+        assert report["ResponseMetadata"]["stats"]["num_tables_analyzed"] == 2
+
+    def test_missing_file_raises_before_any_catalog_call(self, spark, db, tmp_path, monkeypatch):
+        from pyspark.sql.catalog import Catalog
+
+        from easy_alterator_spark.cli import run_alterator
+
+        def no_catalog(*args, **kwargs):
+            raise AssertionError("catalog called before the DDL files were read")
+
+        monkeypatch.setattr(Catalog, "tableExists", no_catalog)
+        (tmp_path / "here.hql").write_text(
+            f"CREATE EXTERNAL TABLE `{db}.read_here`(`id` int) STORED AS PARQUET;"
+        )
+        missing = tmp_path / "gone.hql"
+        with pytest.raises(FileNotFoundError) as err:
+            run_alterator(spark, [str(tmp_path / "here.hql"), str(missing)], validate=True)
+        assert str(missing) in str(err.value)
+
+    def test_file_path_is_the_input_file_name_uri(self, spark, tmp_path):
+        """``file_path`` is the qualified, percent-encoded URI that
+        Spark's ``input_file_name`` gives, so reports name files as
+        before."""
+        from easy_alterator_spark.ddl.parser import read_ddl_corpus
+
+        d = tmp_path / "d ir"
+        d.mkdir()
+        (d / "x.hql").write_text("CREATE TABLE `a.b` (`c` int) USING iceberg;")
+        [row] = read_ddl_corpus(spark, [str(d / "x.hql")]).collect()
+        assert row["file_path"] == f"file://{tmp_path}/d%20ir/x.hql"
+        assert row["ddl"] == "create table `a.b` (`c` int) using iceberg;"

@@ -95,11 +95,12 @@ class TestJoinStrategy:
 
 
 class TestSchemaDiffPlanShape:
-    """Each schema diff runs as a few exchanges over table-count-sized
-    inputs, each table diffed inside its row: one shuffle per groupBy or
-    window, one broadcast per catalog side. A join per reference merge
-    shows up here as dozens. Counted in the final AQE plan, which host
-    steal cannot move."""
+    """Each schema diff is a projection over one local relation, each
+    table diffed inside its row, and the optimizer folds it into a
+    ``LocalRelation`` on the driver: no exchange, no Spark job. A join
+    per reference merge, or a groupBy, window or broadcast that attaches
+    the catalog, shows up here as exchanges and jobs. Exchanges are
+    counted in the final AQE plan, which host steal cannot move."""
 
     MAX_EXCHANGES = 4
 
@@ -132,6 +133,30 @@ class TestSchemaDiffPlanShape:
     def test_diff_is_a_few_exchanges(self, diffs, name):
         n = self._exchanges(diffs[name])
         assert n["shuffle"] + n["broadcast"] <= self.MAX_EXCHANGES, (name, n)
+
+    @pytest.mark.parametrize("name", ["hive_diff", "iceberg_diff"])
+    def test_diff_optimizes_to_one_local_relation(self, diffs, name):
+        """Catalyst evaluates the diff while it optimizes the plan
+        (``ConvertToLocalRelation``): what is left to run is the
+        evaluated rows."""
+        plan = diffs[name]._jdf.queryExecution().optimizedPlan()
+        assert plan.nodeName() == "LocalRelation", (name, plan.nodeName())
+
+    def test_build_report_runs_no_job(self, spark, diffs):
+        """``build_report``'s one collect reads the evaluated rows back:
+        its job group holds no job."""
+        from easy_alterator_spark.diff import build_report
+
+        sc = spark.sparkContext
+        group = "test-build-report-jobs"
+        sc.setJobGroup(group, "build_report(hive_diff(...))")
+        try:
+            report = build_report(diffs["hive_diff"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert report["ResponseMetadata"]["stats"]["num_tables_analyzed"] > 0
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
     @pytest.mark.parametrize("name", ["hive_diff", "iceberg_diff"])
     def test_diff_starts_no_python_worker(self, diffs, name):
